@@ -62,7 +62,7 @@ alone is provably weak (all exactness-preserving):
   The EXCLUSION side itself picks between three exact plans by shape
   (driver-decided from term stats): broadcast docset applied inside
   the decode kernel (small exclusions), range-pruned anti-join
-  (_neg_range_prune: tiny positive + huge exclusion — excluded blocks
+  (_neg_range_ids: tiny positive + huge exclusion — excluded blocks
   broadcast-range-semi-joined against the positive candidate ids
   before any ids decode, O(df_pos) work), or the distributed LEFT
   ANTI over the full excluded-ids decode.
@@ -77,6 +77,15 @@ alone is provably weak (all exactness-preserving):
   ONE numpy pass (_decode_score_partials); only (doc_id, score, hits)
   partials cross Arrow, and the JVM merely finishes the partial sums.
 
+ONE PLANNER: every decision above is made once, driver-side, by
+plan_query(), which returns a frozen QueryPlan (plan kind, tau, thetas,
+k_eff, estimated blocks kept, impact-routed vs doc-ordered terms, the
+exclusion plan, whether the probe ran and verification is needed, the
+fan-out/coalesce choice). search() is plan_query + execution;
+batch_search()'s route-out model takes each query's cost from its plan;
+plan_summary() renders the plan search() would execute and
+search_with_stats() reports it, so the two cannot disagree.
+
 Per-query instrumentation (the reference's --stats analog,
 cli.rs:14-96, dump at cli.rs:510-512): `search_with_stats` records
 blocks decoded / total, postings decoded, and wall time per query to
@@ -90,6 +99,7 @@ import re
 import time
 import uuid
 from collections.abc import Iterator
+from dataclasses import dataclass, field
 from functools import reduce
 
 import numpy as np
@@ -228,10 +238,10 @@ def _term_block_stats(spark, st: dict, wh: Warehouse, terms: list[str]) -> dict[
     """Per-term pruning metadata from term_block_stats, memoized. Returns
     only terms that have a row; an index built before the summary stage
     existed simply yields {} (pruning then falls back to exhaustive)."""
-    if _block_stats_rel(spark, st, wh) is False:
-        return {}
     missing = [t for t in terms if t not in st["bstats"]]
     if missing:
+        if _block_stats_rel(spark, st, wh) is False:
+            return {}
         rel = st["block_stats_rel"]
         has_ladder = "impact_ladder" in rel.columns
         rows = rel.filter(F.col("term").isin(missing)).collect()
@@ -371,30 +381,24 @@ def _replay_cached_batch(spark: SparkSession, wh: Warehouse, hit: dict) -> DataF
     return out.orderBy("query_id", F.desc("score"), F.asc("doc_id"))
 
 
-def _replay_cached_search(spark: SparkSession, st: dict, hit: dict) -> DataFrame:
+def _replay_cached_search(spark: SparkSession, st: dict, key, hit: dict) -> DataFrame:
     """Serve a repeated query from its memoized plan. kind='df' returns
     the lazy plan as-is (collect re-executes it). kind='verify'
     (pruned negation / within) RE-RUNS the pruned job and the
     a-posteriori verification on every call — only the plan and tau are
-    reused, never the rows — and falls back to the (memoized lazy)
-    exhaustive plan on a shortfall, exactly like the first call."""
+    reused, never the rows. On a shortfall the exhaustive plan (exact
+    unconditionally) replaces the memo entry, exactly as a first call's
+    shortfall does."""
     if hit["kind"] == "df":
         return hit["df"]
-    rows = hit["pre"].collect()
-    if len(rows) == hit["k"] and float(rows[-1]["score"]) >= hit["tau"]:
-        topk = _values_df(
-            spark,
-            [f"({int(r['doc_id'])}L, {_sql_double(r['score'])})" for r in rows],
-            "doc_id, score",
-        )
-    else:
-        fb = hit.get("fallback")
-        if fb is None:
-            fb = hit["fallback_fn"]()
-            hit["fallback"] = fb
-        topk = fb
+    topk = _verified_topk(spark, hit["pre"].collect(), hit["k"], hit["tau"])
+    shortfall = topk is None
+    if shortfall:
+        topk = hit["fallback_fn"]()
     if hit["with_url"]:
         topk = _attach_url(spark, st, hit["root"], topk)
+    if shortfall:
+        _plan_cache_put(st, key, {"kind": "df", "df": topk})
     return topk
 
 
@@ -549,9 +553,7 @@ def _idf(n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
-def _neg_docs(spark, wh, st, neg: list[str]) -> DataFrame | None:
-    if not neg:
-        return None
+def _neg_docs(spark, wh, st, neg: list[str]) -> DataFrame:
     # no distinct(): LEFT ANTI is set-semantics already — deduping a
     # stopword's half-million ids would add a full shuffle for nothing
     return _decode_blocks_ids_only(_postings_for(spark, wh, st, neg))
@@ -602,15 +604,11 @@ def _ids_per_term(spark, wh, st, terms: list[str]) -> dict[str, np.ndarray]:
     return {t: cache[t] for t in terms}
 
 
-def _neg_docset(spark, wh, st, neg: list[str], dfs: dict[str, int]):
-    """(broadcast sorted np.int64 exclusion ids) | None when over the
-    size gate. Memoized per warehouse + term set — repeat queries with
-    the same exclusion reuse the broadcast."""
-    live_neg = sorted(t for t in neg if t in dfs)
-    if not live_neg:
-        return None
-    if sum(dfs[t] for t in live_neg) > _NEG_DOCSET_MAX_POSTINGS:
-        return None
+def _neg_docset(spark, wh, st, live_neg: list[str]):
+    """Broadcast sorted np.int64 exclusion ids of the (sorted) live
+    exclusion terms; plan_query checked the size gate. Memoized per
+    warehouse + term set — repeat queries with the same exclusion reuse
+    the broadcast."""
     key = tuple(live_neg)
     cache = st.setdefault("docset_bc", {})
     if key in cache:
@@ -629,7 +627,7 @@ def _neg_docset(spark, wh, st, neg: list[str], dfs: dict[str, int]):
 _NEG_RANGE_MAX_CAND = 200_000
 
 
-def _neg_range_prune(spark, wh, st, neg: list[str], dfs: dict[str, int], live: list[str]):
+def _neg_range_ids(spark, wh, st, live_neg: list[str], live: list[str]) -> DataFrame:
     """The scale plan for tiny-positive / huge-exclusion negation
     ('w0003 -the' at web scale): instead of decoding the excluded
     term's ENTIRE doc_ids (O(df_neg) — the last O(corpus) query shape),
@@ -639,38 +637,14 @@ def _neg_range_prune(spark, wh, st, neg: list[str], dfs: dict[str, int], live: l
     intersects the candidate set — a broadcast range semi-join on block
     METADATA (same machinery as phrase_search), then ids-decode of the
     ~min(df_pos, n_blocks) surviving blocks: O(df_pos) work however hot
-    the excluded term is.
-
-    Returns the pruned excluded-ids DataFrame when the shape qualifies
-    (all gates driver-side from term_stats: candidates fit a broadcast,
-    the exclusion is >=4x larger than the positive side so the prune
-    pays, and the BNLJ probe product is bounded), else None (caller
-    falls back to the full-decode LEFT ANTI). The candidate set is an
-    ids-only decode of the POSITIVE terms' postings (cheaper than the
-    scoring decode, and a superset of any pruned positive plan's
-    candidates — sound for exclusion whichever plan scores)."""
-    if not _neg_range_eligible(spark, wh, st, neg, dfs, live):
-        return None
-    live_neg = sorted(t for t in neg if t in dfs)
+    the excluded term is. plan_query decides the shape qualifies
+    (_range_prune_ok). The candidate set is an ids-only decode of the
+    POSITIVE terms' postings (cheaper than the scoring decode, and a
+    superset of any pruned positive plan's candidates — sound for
+    exclusion whichever plan scores)."""
     cand = _decode_blocks_ids_only(_postings_for(spark, wh, st, live)).distinct()
     blocks = _range_semi_join(_postings_for(spark, wh, st, live_neg), cand)
     return _decode_blocks_ids_only(blocks)
-
-
-def _neg_range_eligible(spark, wh, st, neg, dfs, live) -> bool:
-    """ALL the _neg_range_prune gates, driver-side only — shared with
-    plan_summary so --strats reports exactly the plan search() will run."""
-    live_neg = sorted(t for t in neg if t in dfs)
-    if not live_neg or "min_doc_id" not in st["postings_rel"].columns:
-        return False
-    sum_pos = sum(dfs[t] for t in live if t in dfs)
-    sum_neg = sum(dfs[t] for t in live_neg)
-    if sum_pos == 0 or sum_pos > _NEG_RANGE_MAX_CAND or sum_neg <= 4 * sum_pos:
-        return False
-    bs = _term_block_stats(spark, st, wh, live_neg)
-    if len(bs) != len(live_neg):
-        return False
-    return sum_pos * sum(b["n_blocks"] for b in bs.values()) <= _PHRASE_BNLJ_MAX
 
 
 def _range_semi_join(blocks: DataFrame, cand: DataFrame) -> DataFrame:
@@ -707,13 +681,6 @@ _FAN_OUT_MIN_POSTINGS = 65_536
 _COALESCE_MAX_KEPT = 64
 
 
-def _fan_out_blocks(spark, blocks: DataFrame, est_postings: int) -> DataFrame:
-    par = spark.sparkContext.defaultParallelism
-    if est_postings < 2 * _FAN_OUT_MIN_POSTINGS:
-        return blocks
-    return blocks.repartition(min(par, est_postings // _FAN_OUT_MIN_POSTINGS))
-
-
 def _docs_unique(st: dict, live: list[str]) -> bool:
     """True when every doc is guaranteed to appear in at most ONE decode
     partial row: a single positive term on an unsegmented index (one
@@ -730,6 +697,7 @@ def _agg_topk(
     k: int,
     within_docs: DataFrame | None = None,
     unique_docs: bool = False,
+    penalties: DataFrame | None = None,
 ) -> DataFrame:
     """Final aggregation over (doc_id, score, hits) partials. hits sums
     to the number of distinct query terms a doc matched (each (term,
@@ -748,7 +716,11 @@ def _agg_topk(
     the interactive stage count for the most common query shape; the
     caller is responsible for the uniqueness precondition (appends can
     in principle re-introduce a doc_id in a new segment, so it is gated
-    on n_appends == 0)."""
+    on n_appends == 0).
+
+    penalties (doc_id, penalty), the '~less' terms' decoded-in-full
+    scores, are subtracted from the surviving candidates — never adding
+    any, so unique_docs must be False with them."""
     if unique_docs:
         agg = partials  # one row per doc already; mode/n_terms trivial at 1 term
     else:
@@ -761,17 +733,21 @@ def _agg_topk(
         agg = agg.join(neg_docs, "doc_id", "left_anti")
     if within_docs is not None:
         agg = agg.join(within_docs, "doc_id", "left_semi")
+    if penalties is not None:
+        agg = agg.join(penalties, "doc_id", "left").withColumn(
+            "score", F.col("score") - F.coalesce(F.col("penalty"), F.lit(0.0))
+        )
     # TakeOrderedAndProject: per-partition heap + driver merge, no global sort
     return agg.select("doc_id", "score").orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def _thetas_for_tau(
-    live: list[str], idf_map: dict[str, float], ub: dict[str, float], sum_ub: float,
-    tau: float, ub_corr: float,
+    live: list[str], idf_map: dict[str, float], ub: dict[str, float], tau: float, ub_corr: float,
 ) -> dict[str, float]:
     """Per-term stored-block_max_wand thresholds: a block of term t can
     hold a >=tau doc only if idf_t * bmax_stored * ub_corr + UB_others
     >= tau, i.e. bmax_stored >= (tau - UB_others) / (idf_t * ub_corr)."""
+    sum_ub = sum(ub.values())
     return {t: (tau - (sum_ub - ub[t])) / (idf_map[t] * ub_corr) for t in live}
 
 
@@ -801,7 +777,6 @@ def _wand_thetas(
         return None, float("-inf")
     ub_corr, tau_corr = max(1.0, ratio), min(1.0, ratio)
     ub = {t: idf_map[t] * bstats[t]["ub_wand"] * ub_corr for t in live}
-    sum_ub = sum(ub.values())
     tau = float("-inf")
     for t in live:
         tw = bstats[t]["top_wands"]
@@ -817,7 +792,7 @@ def _wand_thetas(
     if tau == float("-inf"):
         return None, tau
     tau -= abs(tau) * 1e-9 + 1e-12  # float-safety margin (still a lower bound)
-    return _thetas_for_tau(live, idf_map, ub, sum_ub, tau, ub_corr), tau
+    return _thetas_for_tau(live, idf_map, ub, tau, ub_corr), tau
 
 
 def _deep_kth_wand(bs: dict, k: int, block_size: int) -> float | None:
@@ -876,24 +851,14 @@ def _routed_blocks(st: dict, live: list[str], thetas: dict[str, float], imp: set
     partition), cold terms their doc_id-ordered blocks, both
     bucket-partition-pruned with the theta comparison pushed into the
     parquet scan."""
-    sel = ["term", "n_docs", "doc_ids", "tfs", "doc_lens"]
     hot = [t for t in live if t in imp]
     cold = [t for t in live if t not in imp]
-    parts = []
-    if cold:
-        bks = sorted({st["buckets"][t] for t in cold})
-        parts.append(
-            st["postings_rel"]
-            .filter(F.col("bucket").isin(bks) & _block_filter(cold, thetas))
-            .select(*sel)
-        )
-    if hot:
-        bks = sorted({st["buckets"][t] for t in hot})
-        parts.append(
-            st["impact_rel"]
-            .filter(F.col("bucket").isin(bks) & _block_filter(hot, thetas))
-            .select(*sel)
-        )
+    parts = [
+        rel.filter(F.col("bucket").isin(sorted({st["buckets"][t] for t in ts})) & _block_filter(ts, thetas))
+        .select("term", "n_docs", "doc_ids", "tfs", "doc_lens")
+        for rel, ts in ((st["postings_rel"], cold), (st.get("impact_rel"), hot))
+        if ts
+    ]
     return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
 
@@ -964,145 +929,504 @@ _PROBE_MIN_POSTINGS = 4_000_000
 _PHRASE_BNLJ_MAX = 50_000_000
 
 
-def _probe_tau(spark, st: dict, hot_live: list[str], idf_map: dict[str, float],
-               avgdl: float, k: int, target_postings: int = 8192) -> float:
-    """Refine tau with ONE small extra job: decode the top ~target_postings
-    impact postings per hot query term, aggregate the partial BM25 sums
-    per doc, take the k-th best. Every partial sum is achieved by a real
-    doc (missing terms/blocks only lower it), so the k-th best partial is
-    a valid lower bound on the true k-th best score — far tighter than
+# Cost check shared by every routed-vs-exhaustive choice (search, the
+# batch shared scan and its route-out model): the routed plan runs only
+# when the ladder bound on the blocks its thetas keep is below this
+# share of the candidate blocks. Above it the plain exhaustive scan is
+# strictly cheaper (no filter evaluation, no union, no impact read) —
+# measured 1.15s vs 1.37s on "of and" with the single-term tau at 600k
+# docs.
+_ROUTED_MAX_KEPT_FRAC = 0.6
+
+
+def _est_cost(bstats: dict[str, dict], thetas: dict[str, float], imp: set[str]) -> tuple[int, int]:
+    """(ladder upper bound on the blocks `thetas` keep, candidate blocks)
+    over the terms `thetas` covers."""
+    est = sum(_est_kept_blocks(bstats[t], thetas[t], t in imp) for t in thetas)
+    return est, sum(bstats[t]["n_blocks"] for t in thetas)
+
+
+def _k_eff(k: int, keep_frac: float) -> int:
+    """tau depth for a plan whose candidates survive a filter (exclusion,
+    within docset) with probability keep_frac: deep enough that ~k tau
+    witnesses survive DESPITE binomial noise (margin 4*sqrt(k)+4 puts
+    the shortfall probability well under 1%; a bare k/keep was measured
+    to fall back ~25% of the time). Tunes the verify-fallback rate only,
+    never correctness."""
+    if keep_frac >= 1.0:
+        return k
+    return math.ceil((k + 4.0 * math.sqrt(k) + 4.0) / max(keep_frac, 1e-9))
+
+
+def _probe_tau(spark, st: dict, terms: list[str], imp: set[str], idf_map: dict[str, float],
+               avgdl: float, k: int, all_hit: bool, target_postings: int = 8192) -> float:
+    """Refine tau with ONE small extra job: decode a prefix of every
+    term's postings — the impact-ordered copy's head for impact-routed
+    terms (highest-wand postings first), the doc_id-ordered head
+    otherwise — aggregate the partial BM25 sums per doc and take the
+    k-th best. This is MaxScore's candidate pass as a prefix scan.
+
+    Disjunctive (all_hit=False): every partial sum is achieved by a
+    real doc (missing terms/blocks only lower it), so the k-th best
+    partial lower-bounds the true k-th best score — far tighter than
     the single-term bound for multi-stopword queries (measured at 600k
     docs, "of and": probe tau 0.2005 vs single-term 0.1530, true k-th
-    0.2029). This is the candidate pass of MaxScore, expressed as a
-    prefix scan of the impact lists.
+    0.2029).
+
+    Conjunctive (all_hit=True, VERDICT r4 #7): only docs that matched
+    ALL terms WITHIN the prefix count. Each genuinely contains every
+    query term (each (term, doc) posting exists exactly once per routed
+    copy, and every term routes to exactly one copy), and its prefix sum
+    only misses pruned-away contributions, so k such docs prove the
+    true k-th best CONJUNCTIVE score >= the k-th best prefix sum.
 
     Depth matters: the refined tau comes from docs present in SEVERAL
     terms' prefixes, and for independent-ish term frequencies that
     overlap grows with prefix_depth^2 / n_docs — a 2k prefix measured
     only ~8 overlapping docs at 600k (tau collapsed to the single-term
-    bound) while 8k yields ~10x more."""
+    bound) while 8k yields ~10x more. Returns -inf when fewer than k
+    docs qualify."""
     block_size = int(st["cfg"].get("block_size") or 128)
     n_salts = max(1, int(st["cfg"].get("n_salts") or 1))
     per_salt = max(4, -(-target_postings // (block_size * n_salts)))
-    probe = st["impact_rel"].filter(
-        F.col("bucket").isin(sorted({st["buckets"][t] for t in hot_live}))
-        & F.col("term").isin(hot_live)
-        & (F.col("block_id") < per_salt)
-    )
-    rows = (
-        _decode_score_partials(probe, {t: idf_map[t] for t in hot_live}, avgdl)
-        .groupBy("doc_id").agg(F.sum("score").alias("s"))
-        .orderBy(F.desc("s")).limit(k).collect()
-    )
-    if len(rows) < k:
-        return float("-inf")
-    s = float(rows[-1]["s"])
-    return s - abs(s) * 1e-9 - 1e-12
-
-
-def _probe_tau_and(spark, st: dict, wh: Warehouse, live: list[str],
-                   idf_map: dict[str, float], avgdl: float, k: int,
-                   target_postings: int = 8192) -> float:
-    """Conjunctive tau (VERDICT r4 #7, MaxScore for AND): ONE small job
-    decodes a prefix of EVERY live term's postings — the impact-ordered
-    copy's head for hot terms (highest-wand postings first), the
-    doc_id-ordered head otherwise — keeps only docs that matched ALL
-    terms WITHIN the prefix, and returns the k-th best partial sum.
-
-    Validity: each such doc genuinely contains every query term (each
-    (term, doc) posting exists exactly once per routed copy, and every
-    term routes to exactly one copy here, so hits == n_terms <=> all
-    terms present), and its prefix sum only misses pruned-away positive
-    contributions, so it lower-bounds the doc's true score. k such docs
-    therefore prove the true k-th best CONJUNCTIVE score >= the k-th
-    best prefix sum -> a valid tau for the AND block filter. Returns
-    -inf when fewer than k all-term docs appear in the prefix (selective
-    conjunctions — the candidate-driven plan handles those)."""
-    block_size = int(st["cfg"].get("block_size") or 128)
-    n_salts = max(1, int(st["cfg"].get("n_salts") or 1))
-    per_salt = max(4, -(-target_postings // (block_size * n_salts)))
-    imp = _impact_terms(spark, st, wh)
-    hot = [t for t in live if t in imp]
-    cold = [t for t in live if t not in imp]
-    parts = []
-    if hot:
-        parts.append(
-            st["impact_rel"].filter(
-                F.col("bucket").isin(sorted({st["buckets"][t] for t in hot}))
-                & F.col("term").isin(hot)
-                & (F.col("block_id") < per_salt)
-            )
+    hot = [t for t in terms if t in imp]
+    cold = [t for t in terms if t not in imp]
+    parts = [
+        rel.filter(
+            F.col("bucket").isin(sorted({st["buckets"][t] for t in ts}))
+            & F.col("term").isin(ts)
+            & (F.col("block_id") < per_salt)
         )
-    if cold:
-        parts.append(
-            st["postings_rel"].filter(
-                F.col("bucket").isin(sorted({st["buckets"][t] for t in cold}))
-                & F.col("term").isin(cold)
-                & (F.col("block_id") < per_salt)
-            )
-        )
+        for rel, ts in ((st.get("impact_rel"), hot), (st["postings_rel"], cold))
+        if ts
+    ]
     probe = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    rows = (
-        _decode_score_partials(probe, {t: idf_map[t] for t in live}, avgdl)
-        .groupBy("doc_id")
-        .agg(F.sum("score").alias("s"), F.sum("hits").alias("h"))
-        .filter(F.col("h") == len(live))
-        .orderBy(F.desc("s")).limit(k).collect()
+    agg = _decode_score_partials(probe, {t: idf_map[t] for t in terms}, avgdl).groupBy("doc_id").agg(
+        F.sum("score").alias("s"), F.sum("hits").alias("h")
     )
+    if all_hit:
+        agg = agg.filter(F.col("h") == len(terms))
+    rows = agg.orderBy(F.desc("s")).limit(k).collect()
     if len(rows) < k:
         return float("-inf")
     s = float(rows[-1]["s"])
     return s - abs(s) * 1e-9 - 1e-12
 
 
-def _and_candidate_blocks(spark, wh: Warehouse, st: dict, live: list[str], dfs: dict[str, int]):
+def _and_candidate_blocks(spark, wh: Warehouse, st: dict, seed: str, live: list[str]) -> DataFrame:
     """Candidate-driven conjunction — the selective-AND scale plan
     ('w0003 AND the' at web scale): every AND result must contain the
-    RAREST term, so its doc_ids (one ids-only column-pruned decode,
-    O(df_rare)) are the complete candidate set; the other terms' blocks
-    are range-semi-joined against it on block METADATA before any
-    decode (same machinery as phrase_search phase 1b / negation range
-    pruning), making the whole query O(df_rare) however hot the other
-    terms are.
+    RAREST term (`seed`), so its doc_ids (one ids-only column-pruned
+    decode, O(df_rare)) are the complete candidate set; the other
+    terms' blocks are range-semi-joined against it on block METADATA
+    before any decode (same machinery as phrase_search phase 1b /
+    negation range pruning), making the whole query O(df_rare) however
+    hot the other terms are.
 
     Exactness: a candidate doc's every other-term block covers its
     doc_id, hence intersects the candidate set and survives the
     semi-join -> candidates get complete scores and hit counts. A
     non-candidate doc lacks the rare term entirely, so its hit count
     can never reach n_terms and the AND filter drops it regardless of
-    which of its blocks were decoded. Returns the pruned block scan, or
-    None when the shape doesn't qualify (gates all driver-side from
-    term_stats, mirroring _neg_range_eligible: candidates fit the
-    broadcast, the others are >=4x larger so the prune pays, and the
-    BNLJ probe product is bounded)."""
-    rare = _and_candidate_rare(spark, wh, st, live, dfs)
-    if rare is None:
-        return None
-    others = [t for t in live if t != rare]
-    cand = _decode_blocks_ids_only(_postings_for(spark, wh, st, [rare])).distinct()
+    which of its blocks were decoded. plan_query decides the shape
+    qualifies (_range_prune_ok)."""
+    others = [t for t in live if t != seed]
+    cand = _decode_blocks_ids_only(_postings_for(spark, wh, st, [seed])).distinct()
     oblocks = _range_semi_join(_postings_for(spark, wh, st, others), cand)
-    return _postings_for(spark, wh, st, [rare]).unionByName(oblocks)
+    return _postings_for(spark, wh, st, [seed]).unionByName(oblocks)
 
 
-def _and_candidate_rare(spark, wh: Warehouse, st: dict, live: list[str], dfs: dict[str, int]):
-    """_and_candidate_blocks' driver-side gates (shared with plan_summary
-    so --strats reports exactly the plan search() will run): the seed
-    term when the shape qualifies, else None."""
-    if "min_doc_id" not in st["postings_rel"].columns:
-        return None
-    rare = min(live, key=lambda t: dfs[t])
-    others = [t for t in live if t != rare]
-    if not others:
-        return None
-    df_r, sum_o = dfs[rare], sum(dfs[t] for t in others)
-    if df_r == 0 or df_r > _NEG_RANGE_MAX_CAND or sum_o <= 4 * df_r:
-        return None
+@dataclass(frozen=True)
+class QueryPlan:
+    """Every driver-side decision for one query, made once by plan_query.
+
+    search() executes it, batch_search()'s route-out model reads its
+    cost, plan_summary() renders it, and search_with_stats() reports
+    it. kind is None when nothing can match (no live positive term, or
+    an empty within docset).
+    tau is -inf when none formed; thetas is None likewise. tau and
+    thetas are reported even when the cost check chose exhaustive."""
+
+    query: str  # after wildcard/fuzzy rewrite
+    k: int
+    mode: str
+    live: tuple[str, ...] = ()  # positive terms present in the corpus
+    neg: tuple[str, ...] = ()  # exclusion terms as written
+    less: tuple[str, ...] = ()  # '~less' terms present in the corpus
+    dfs: dict = field(default_factory=dict)
+    idf: dict = field(default_factory=dict)  # live positive and less terms
+    kind: str | None = None  # exhaustive | routed | routed+probe |
+    # and-candidate[+neg][+less] | and-probe
+    neg_plan: str | None = None  # docset-kernel | range-anti | anti-join
+    seed: str | None = None  # and-candidate: the rarest term
+    k_eff: int = 0  # tau depth (k deepened by exclusion/within)
+    tau: float = float("-inf")
+    thetas: dict | None = None  # per-term block_max_wand floors
+    impact: tuple[str, ...] = ()  # terms a routed scan reads impact-ordered
+    est_kept: int | None = None  # ladder bound on blocks the thetas keep
+    n_blocks: int | None = None  # candidate blocks of the live terms
+    probe: bool = False  # the tau-refinement probe job ran
+    needs_verify: bool = False  # a-posteriori check before returning
+    fan_out: bool = False  # repartition a hot single-term exhaustive decode
+    coalesce: bool = False  # routed scan small enough for 4 tasks
+
+    @property
+    def label(self) -> str | None:
+        """The plan string search_with_stats reports (kind, then the
+        exclusion plan)."""
+        if self.neg_plan is None:
+            return self.kind
+        return f"{self.kind or 'exhaustive'}+{self.neg_plan}"
+
+    @property
+    def routed(self) -> bool:
+        """The plan reads a theta-filtered routed scan."""
+        return self.kind in ("routed", "routed+probe", "and-probe")
+
+    @property
+    def cost(self) -> int | None:
+        """Blocks this plan decodes, in ladder-bound units: the kept
+        blocks when it routes, every candidate block when the cost check
+        chose exhaustive; None when no tau formed."""
+        if self.thetas is None:
+            return None
+        return self.est_kept if self.routed else self.n_blocks
+
+
+def _range_prune_ok(spark, st: dict, wh: Warehouse, n_cand: int, others: list[str],
+                    dfs: dict[str, int]) -> bool:
+    """The gate for every range-pruned plan (the range-anti exclusion and
+    the candidate-driven AND), driver-side from term stats: candidates
+    (n_cand doc ids) fit the broadcast, the `others` side is >=4x larger
+    so the prune pays, and the BNLJ probe product is bounded."""
+    if not others or "min_doc_id" not in st["postings_rel"].columns:
+        return False
+    if n_cand == 0 or n_cand > _NEG_RANGE_MAX_CAND or sum(dfs[t] for t in others) <= 4 * n_cand:
+        return False
     bs = _term_block_stats(spark, st, wh, others)
     if len(bs) != len(others):
+        return False
+    return n_cand * sum(b["n_blocks"] for b in bs.values()) <= _PHRASE_BNLJ_MAX
+
+
+def _within_docs(spark, wh: Warehouse, within: DataFrame | str | None) -> DataFrame | None:
+    """The within docset as a doc_id relation: a SQL predicate over docs
+    METADATA is pushed down into the parquet scan (only doc_id and the
+    referenced columns are read)."""
+    if within is None:
         return None
-    if df_r * sum(b["n_blocks"] for b in bs.values()) > _PHRASE_BNLJ_MAX:
+    if isinstance(within, str):
+        return catalog.read_table(spark, wh.root, "docs").filter(F.expr(within)).select("doc_id")
+    return within.select("doc_id")
+
+
+def plan_query(
+    spark: SparkSession,
+    warehouse: str | Warehouse,
+    query: str,
+    k: int = 10,
+    mode: str = "or",
+    prune: bool = True,
+    probe: bool | str = "auto",
+    within: DataFrame | str | None = None,
+    n_within: int | None = None,
+) -> QueryPlan:
+    """Plan one query without executing it: parse, term stats, the
+    exclusion plan, tau and thetas, the probe, the cost check and the
+    scan shape. Arguments mean what they mean for search(). Reads
+    metadata only through the memoized per-term stats; the only Spark
+    jobs it can launch are the ones planning needs — the within count
+    (skipped when n_within is given) and the probe (never with
+    probe=False).
+
+    OR plan (and single-term AND): tau at the depth k_eff that the
+    exclusion's df and the within docset's selectivity call for, thetas
+    per term, lowered by the '~less' terms' total upper bound; the probe
+    refines tau for weak two-stopword shapes; the cost check picks the
+    routed scan or exhaustive. Negation and within shapes that route
+    need the a-posteriori verification (search()).
+
+    AND plan: the candidate-driven range semi-join when its gate
+    passes (composes with '-neg' and '~less': every conjunctive match
+    carries an exact positive score before exclusion and penalties
+    apply, no tau). Otherwise, with no '-neg' and no '~less' and a probe
+    worth its job, the conjunctive probe tau (a-priori valid for the
+    unfiltered conjunctive k-th best; a within docset deepens the probe
+    and needs the verification); else exhaustive."""
+    wh = warehouse if isinstance(warehouse, Warehouse) else Warehouse(warehouse)
+    st = _wh_state(spark, wh)
+    if _needs_rewrite(query):
+        query = expand_wildcards(spark, wh, query)
+    pos, neg, less = parse_query(query)
+    plan = {"query": query, "k": k, "mode": mode, "neg": tuple(neg)}
+    if not pos:
+        return QueryPlan(**plan)
+    n_docs, avgdl = int(st["stats"]["n_docs"]), float(st["stats"]["avgdl"])
+    _term_buckets(spark, st, pos + neg + less)
+    dfs = _term_dfs(spark, st, wh, pos + less + neg)
+    live = [t for t in pos if t in dfs]
+    plan["live"] = tuple(live)
+    if not live or (mode == "and" and len(live) < len(pos)):
+        return QueryPlan(**plan)
+    live_less = [t for t in less if t in dfs]
+    idf = {t: _idf(n_docs, dfs[t]) for t in live + live_less}
+    plan.update(less=tuple(live_less), dfs=dfs, idf=idf, kind="exhaustive", k_eff=k, tau=float("-inf"))
+    if neg:
+        # exclusion, three plans by shape: small exclusion -> docset
+        # (driver-decoded broadcast ids applied inside the decode
+        # kernel); tiny positive + huge exclusion -> range-pruned
+        # anti-join (O(df_pos) decode); else the distributed LEFT ANTI
+        # over the full excluded-ids decode, which always fits memory
+        live_neg = sorted(t for t in neg if t in dfs)
+        if live_neg and sum(dfs[t] for t in live_neg) <= _NEG_DOCSET_MAX_POSTINGS:
+            plan["neg_plan"] = "docset-kernel"
+        elif _range_prune_ok(spark, st, wh, sum(dfs[t] for t in live), live_neg, dfs):
+            plan["neg_plan"] = "range-anti"
+        else:
+            plan["neg_plan"] = "anti-join"
+
+    def keep_within() -> float | None:
+        """Share of the corpus the within docset keeps (1.0 without
+        one); None when it is empty. Its selectivity is EXACT (one
+        narrow count job on the pushed-down scan)."""
+        nonlocal n_within
+        if within is None:
+            return 1.0
+        if n_within is None:
+            n_within = _within_docs(spark, wh, within).count()
+        return min(1.0, n_within / max(n_docs, 1)) if n_within else None
+
+    ratio = avgdl / max(float(st["cfg"].get("wand_avgdl") or avgdl), 1e-9)
+    ub_corr = max(1.0, ratio)
+    bsz = int(st["cfg"].get("block_size") or 128)
+    bstats = _term_block_stats(spark, st, wh, live) if prune else {}
+    ub = {t: idf[t] * bstats[t]["ub_wand"] * ub_corr for t in live if t in bstats}
+    est_postings = sum(bstats[t]["n_blocks"] for t in ub) * bsz
+    probe_worth = probe is True or (probe == "auto" and est_postings >= _PROBE_MIN_POSTINGS)
+
+    def cost_check(thetas: dict[str, float], imp: set[str], routed_kind: str) -> None:
+        """Record the thetas and the ladder bound on the blocks they
+        keep; take the routed plan when it provably cuts enough
+        (probe=True forces it — callers use that to exercise the
+        at-scale path)."""
+        est_kept, tot = _est_cost(bstats, thetas, imp)
+        plan.update(thetas=thetas, est_kept=est_kept, n_blocks=tot,
+                    impact=tuple(t for t in live if t in imp))
+        if probe is True or est_kept < _ROUTED_MAX_KEPT_FRAC * tot:
+            plan["kind"] = routed_kind
+
+    if prune and (mode == "or" or len(live) == 1):
+        keep = keep_within()
+        if keep is None:
+            return QueryPlan(**{**plan, "kind": None})
+        if neg:
+            # excluded docs can knock out up to sum(df_neg)/n of tau's
+            # witnesses. No cap on the rate: impact ladders form a tau
+            # at ANY depth, and an impossible depth simply yields no tau
+            # -> exhaustive (the old 0.98 cap made "-<99%-df term>" ask
+            # for a tau 5x too shallow and pay a guaranteed fallback).
+            keep *= 1.0 - min(1.0 - 1e-9, sum(dfs.get(t) or 0 for t in neg) / max(n_docs, 1))
+        k_eff = plan["k_eff"] = _k_eff(k, keep)
+        thetas, tau = _wand_thetas(live, idf, bstats, k_eff, ratio, bsz)
+        if thetas is not None and live_less:
+            # '~less' correction: tau lower-bounds the k-th best POSITIVE
+            # sum (k distinct witness docs); each witness loses at most
+            # sum_t(idf_t * ub_wand_t) to the penalties, so tau -
+            # sum(UB_less) lower-bounds the k-th best FINAL score, and a
+            # top-k doc's positive sum >= its final >= tau. The positive
+            # block filter argument then applies verbatim; penalties are
+            # always decoded in full, so every kept doc's final score is
+            # exact. neg+less and within+less compose: the verification
+            # compares the surviving k-th FINAL score against this tau.
+            bl = _term_block_stats(spark, st, wh, live_less)
+            if all(t in bl for t in live_less):
+                tau -= sum(idf[t] * bl[t]["ub_wand"] * ub_corr for t in live_less)
+                thetas = _thetas_for_tau(live, idf, ub, tau, ub_corr)
+            else:
+                thetas, tau = None, float("-inf")
+        plan["tau"] = tau
+        if thetas is not None:
+            imp = _impact_terms(spark, st, wh)
+            # probe gate: (a) the single-term tau leaves some hot term
+            # essentially unpruned (even its K_TOP-th best block survives)
+            # AND (b) at most two terms carry the upper-bound mass — with
+            # >=3 balanced hot terms NO tau can prune (theta_t =
+            # (tau - UB_others)/idf_t stays below every block max because
+            # UB_others alone approaches any achievable tau), so the probe
+            # job would be pure overhead (measured +0.5s on 3-term queries)
+            weak = any(
+                t in imp
+                and bstats[t]["n_blocks"] > 2 * len(bstats[t]["top_wands"])
+                and thetas[t] <= bstats[t]["top_wands"][-1]
+                for t in live
+            )
+            ubs_sorted = sorted(ub.values(), reverse=True)
+            two_term_shaped = sum(ubs_sorted[2:]) <= 0.15 * (sum(ubs_sorted[:2]) or 1.0)
+            hot_live = [t for t in live if t in imp]
+            if weak and two_term_shaped and len(live) > 1 and hot_live and probe_worth and not live_less:
+                plan["probe"] = True
+                tau2 = _probe_tau(spark, st, hot_live, imp, idf, avgdl, k_eff, all_hit=False)
+                if tau2 > tau:
+                    tau = plan["tau"] = tau2
+                    thetas = _thetas_for_tau(live, idf, ub, tau, ub_corr)
+            cost_check(thetas, imp, "routed+probe" if plan.get("probe") else "routed")
+    elif prune and mode == "and":
+        seed = min(live, key=lambda t: dfs[t])
+        if _range_prune_ok(spark, st, wh, dfs[seed], [t for t in live if t != seed], dfs):
+            plan.update(
+                kind="and-candidate" + ("+neg" if neg else "") + ("+less" if live_less else ""),
+                seed=seed,
+            )
+        elif not neg and not live_less and len(ub) == len(live) and probe_worth:
+            # the probe tau is a-priori valid only for the UNfiltered
+            # conjunctive k-th best, so exclusion and less shapes stay
+            # exhaustive here; a within docset asks the probe for
+            # proportionally deeper witnesses and verifies a posteriori
+            keep = keep_within()
+            if keep is None:
+                return QueryPlan(**{**plan, "kind": None})
+            k_eff = plan["k_eff"] = _k_eff(k, keep)
+            imp = _impact_terms(spark, st, wh)
+            plan["probe"] = True
+            tau = plan["tau"] = _probe_tau(spark, st, live, imp, idf, avgdl, k_eff, all_hit=True)
+            if tau > float("-inf"):
+                cost_check(_thetas_for_tau(live, idf, ub, tau, ub_corr), imp, "and-probe")
+    pruned = plan["kind"] != "exhaustive"
+    return QueryPlan(
+        **plan,
+        needs_verify=pruned and bool(neg or within is not None) and plan["tau"] > float("-inf"),
+        # a ~k-block routed scan over a many-partition relation
+        # (auto-buckets grow with the corpus; warm_postings' cached
+        # relation keeps one partition per scan split) otherwise launches
+        # a python-runner task per partition, nearly all empty — measured
+        # at 2.4M docs/65 buckets: pruned "the" paid 4+ waves of empty
+        # decode round trips
+        coalesce=plan["kind"].startswith("routed") and plan["est_kept"] <= _COALESCE_MAX_KEPT,
+        # zero-exchange single-term exhaustive decode of a hot term:
+        # parallelize its single-partition block scan (bit-identical)
+        fan_out=not pruned and _docs_unique(st, live) and dfs[live[0]] >= 2 * _FAN_OUT_MIN_POSTINGS,
+    )
+
+
+def _observe_blocks(df: DataFrame, prefix: str, *metrics) -> tuple[DataFrame, object]:
+    """Attach an Observation to df — by default the decoded-block
+    counters (blocks_decoded, postings_decoded) of a block relation.
+    Read back with _obs_counts after the action."""
+    from pyspark.sql import Observation
+
+    obs = Observation(f"{prefix}_{uuid.uuid4().hex[:12]}")
+    metrics = metrics or (
+        F.count(F.lit(1)).alias("blocks_decoded"),
+        F.sum("n_docs").alias("postings_decoded"),
+    )
+    return df.observe(obs, *metrics), obs
+
+
+def _verified_topk(spark: SparkSession, rows: list, k: int, tau: float) -> DataFrame | None:
+    """A-POSTERIORI VERIFICATION of a pruned negation/within top-k: every
+    kept doc with POSITIVE-sum score >= tau has ALL its blocks kept (the
+    block filter keeps any block whose bound reaches tau), so its score
+    is exact; every pruned-away doc has true positive sum < tau. With
+    '~less' composed, tau was ALSO lowered by the less terms' total upper
+    bound, so a surviving FINAL score >= tau still implies every pruned
+    doc ranks strictly below. If the surviving k-th score >= tau, the k
+    rows are exact and nothing pruned can displace or tie them: they
+    return as a LocalRelation (insertion order is preserved on collect;
+    re-sorting through orderBy would cost a sampling job). None on a
+    shortfall — the caller reruns exhaustively."""
+    if len(rows) != k or float(rows[-1]["score"]) < tau:
         return None
-    return rare
+    return _values_df(
+        spark,
+        [f"({int(r['doc_id'])}L, {_sql_double(r['score'])})" for r in rows],
+        "doc_id, score",
+    )
+
+
+def _execute_plan(
+    spark: SparkSession, wh: Warehouse, st: dict, plan: QueryPlan,
+    within_docs: DataFrame | None, with_url: bool, pkey=None, observe: bool = False,
+) -> tuple[DataFrame, dict]:
+    """Build the top-k DataFrame for a plan (running the verification
+    for verify shapes) and memoize it under pkey. Returns (topk, run)
+    where run holds the exclusion ids count, the verify outcome and —
+    with observe — the Observations search_with_stats reads back."""
+    run: dict = {}
+
+    def memo(df: DataFrame) -> DataFrame:
+        if pkey is not None:
+            _plan_cache_put(st, pkey, {"kind": "df", "df": df})
+        return df
+
+    if plan.kind is None:
+        return memo(_empty_results(spark)), run
+    live, avgdl = list(plan.live), float(st["stats"]["avgdl"])
+    live_neg = sorted(t for t in plan.neg if t in plan.dfs)
+    excl_bc = neg_docs = None
+    if plan.neg_plan == "docset-kernel":
+        excl_bc = _neg_docset(spark, wh, st, live_neg)
+        run["neg_ids_decoded"] = int(excl_bc.value.size)
+    elif plan.neg_plan == "range-anti":
+        neg_docs = _neg_range_ids(spark, wh, st, live_neg, live)
+    elif plan.neg_plan == "anti-join":
+        neg_docs = _neg_docs(spark, wh, st, list(plan.neg))
+    if observe and neg_docs is not None:
+        neg_docs, run["_obs_neg"] = _observe_blocks(neg_docs, "negstats", F.count(F.lit(1)).alias("neg_ids"))
+    penalties = None
+    if plan.less:
+        penalties = (
+            _decode_score_partials(_postings_for(spark, wh, st, list(plan.less)), plan.idf, avgdl)
+            .groupBy("doc_id").agg(F.sum("score").alias("penalty"))
+        )
+
+    def topk_of(blocks: DataFrame, prefix: str) -> DataFrame:
+        if observe:
+            blocks, run["_obs"] = _observe_blocks(blocks, prefix)
+        return _agg_topk(
+            _decode_score_partials(blocks, plan.idf, avgdl, excl_bc), len(live), plan.mode,
+            neg_docs, plan.k, within_docs, unique_docs=not plan.less and _docs_unique(st, live),
+            penalties=penalties,
+        )
+
+    if plan.routed:
+        blocks = _routed_blocks(st, live, plan.thetas, set(plan.impact))
+        if plan.coalesce:
+            blocks = blocks.coalesce(4)
+    elif plan.kind.startswith("and-candidate"):
+        blocks = _and_candidate_blocks(spark, wh, st, plan.seed, live)
+    else:
+        blocks = _postings_for(spark, wh, st, live)
+        if plan.fan_out:
+            par = spark.sparkContext.defaultParallelism
+            blocks = blocks.repartition(min(par, plan.dfs[live[0]] // _FAN_OUT_MIN_POSTINGS))
+    topk = topk_of(blocks, "qstats")
+
+    def with_urls(df: DataFrame) -> DataFrame:
+        return _attach_url(spark, st, wh.root, df) if with_url else df
+
+    if not plan.needs_verify:
+        return memo(with_urls(topk)), run
+
+    def fallback() -> DataFrame:
+        return topk_of(_postings_for(spark, wh, st, live), "qstats_fb")
+
+    verified = _verified_topk(spark, topk.collect(), plan.k, plan.tau)
+    if verified is None:
+        # shortfall (too many witnesses excluded): rerun exhaustively.
+        # The exhaustive plan is exact unconditionally, so it is what
+        # the memo keeps — repeats pay one job, not pruned + fallback
+        run["prune_fallback"] = True
+        return memo(with_urls(fallback())), run
+    run["prune_verified"] = True
+    if pkey is not None:
+        # memoize the PRE-verification plan + tau: a repeated call
+        # re-executes the pruned job and the a-posteriori check every
+        # time — plan reuse, not result reuse
+        _plan_cache_put(st, pkey, {
+            "kind": "verify", "pre": topk, "tau": plan.tau, "k": plan.k,
+            "with_url": bool(with_url), "root": wh.root, "fallback_fn": fallback,
+        })
+    return with_urls(verified), run
 
 
 def search(
@@ -1115,10 +1439,10 @@ def search(
     with_url: bool = False,
     probe: bool | str = "auto",
     within: DataFrame | str | None = None,
-    _stats: dict | None = None,
 ) -> DataFrame:
     """BM25 top-k. Returns DataFrame(doc_id, score[, url]) already ordered
-    (score DESC, doc_id ASC) and limited to k.
+    (score DESC, doc_id ASC) and limited to k. Planning is plan_query();
+    search executes the plan.
 
     within restricts CANDIDATES to a metadata-filtered docset while
     ranking stats (idf, avgdl) stay corpus-global: a SQL predicate
@@ -1170,417 +1494,17 @@ def search(
     wh = warehouse if isinstance(warehouse, Warehouse) else Warehouse(warehouse)
     st = _wh_state(spark, wh)
     # resolved-plan memo (keyed on the RAW query string, so wildcard/
-    # fuzzy expansion is amortized too): instrumented calls and
-    # DataFrame-valued within (no stable key) bypass it
+    # fuzzy expansion is amortized too): DataFrame-valued within (no
+    # stable key) bypasses it
     pkey = None
-    if _stats is None and (within is None or isinstance(within, str)):
+    if within is None or isinstance(within, str):
         pkey = (query, int(k), mode, bool(prune), probe, bool(with_url), within)
         hit = st.setdefault("plans", {}).get(pkey)
         if hit is not None:
-            return _replay_cached_search(spark, st, hit)
-
-    def _cache_df(df: DataFrame) -> DataFrame:
-        if pkey is not None:
-            _plan_cache_put(st, pkey, {"kind": "df", "df": df})
-        return df
-
-    if _needs_rewrite(query):
-        query = expand_wildcards(spark, wh, query)
-    pos, neg, less = parse_query(query)
-    if _stats is not None:
-        _stats.update({"query": query, "k": k, "mode": mode, "prune": prune, "terms": [], "tau": None})
-    if not pos:
-        return _cache_df(_empty_results(spark))
-
-    stats = st["stats"]
-    n_docs, avgdl = int(stats["n_docs"]), float(stats["avgdl"])
-    _term_buckets(spark, st, pos + neg + less)  # one hash job for all terms
-    dfs = _term_dfs(spark, st, wh, pos + less + neg)
-    live = [t for t in pos if t in dfs]
-    live_less = [t for t in less if t in dfs]
-    if _stats is not None:
-        _stats["terms"] = live
-    if not live or (mode == "and" and len(live) < len(pos)):
-        return _cache_df(_empty_results(spark))
-    idf_map = {t: _idf(n_docs, dfs[t]) for t in live}
-
-    within_docs = None
-    if within is not None:
-        if isinstance(within, str):
-            # predicate over docs METADATA: pushed down into the parquet
-            # scan (only doc_id + referenced columns are read)
-            within_docs = (
-                catalog.read_table(spark, wh.root, "docs")
-                .filter(F.expr(within))
-                .select("doc_id")
-            )
-        else:
-            within_docs = within.select("doc_id")
-        if _stats is not None:
-            _stats["within"] = within if isinstance(within, str) else "<docset>"
-
-    blocks = _postings_for(spark, wh, st, live)
-    # '-term' exclusion, three plans by shape (all driver-decided from
-    # term_stats): small exclusion -> docset fast path (driver-decoded
-    # broadcast ids applied inside the decode kernel); tiny positive +
-    # huge exclusion -> range-pruned anti-join (broadcast range semi-join
-    # on excluded block metadata, O(df_pos) decode — kills the last
-    # O(corpus) query shape); else distributed LEFT ANTI over the full
-    # excluded-ids decode (the fallback that always fits memory)
-    excl_bc = _neg_docset(spark, wh, st, neg, dfs) if neg else None
-    neg_docs, neg_plan = None, None
-    if neg and excl_bc is None:
-        neg_docs = _neg_range_prune(spark, wh, st, neg, dfs, live)
-        neg_plan = "range-anti" if neg_docs is not None else "anti-join"
-        if neg_docs is None:
-            neg_docs = _neg_docs(spark, wh, st, neg)
-    if _stats is not None and neg:
-        _stats["neg_plan"] = "docset-kernel" if excl_bc is not None else neg_plan
-        # exclusion-side cost, per plan: the docset path's ids are on the
-        # driver (exact count now); the distributed plans get an
-        # Observation on the ids decode (read back in search_with_stats)
-        if excl_bc is not None:
-            _stats["neg_ids_decoded"] = int(excl_bc.value.size)
-        elif neg_docs is not None:
-            from pyspark.sql import Observation
-
-            obs_neg = Observation(f"negstats_{uuid.uuid4().hex[:12]}")
-            neg_docs = neg_docs.observe(obs_neg, F.count(F.lit(1)).alias("neg_ids"))
-            _stats["_obs_neg"] = obs_neg
-
-    tau = float("-inf")
-    pruned = False
-    if prune and (mode == "or" or len(live) == 1):
-        # (single-term AND == OR, so it shares this branch; multi-term
-        # AND gets its own two plans below.) Negation prunes with a
-        # df-aware deeper tau and an A-POSTERIORI verification (below):
-        # exactness never depends on the witnesses surviving the anti-join.
-        # '~less' prunes by LOWERING tau by the less terms' total upper
-        # bound (see below). neg+less / within+less COMPOSE (r7): the
-        # deeper-tau k_eff and the less correction stack — tau then
-        # lower-bounds the k-th best FINAL score among survivors, and
-        # the a-posteriori verification (which compares the surviving
-        # k-th FINAL score against the composed tau) covers any
-        # correlation, exactly as for plain negation.
-        bstats = _term_block_stats(spark, st, wh, live)
-        ratio = avgdl / max(float(st["cfg"].get("wand_avgdl") or avgdl), 1e-9)
-        k_eff = k
-        keep_frac = 1.0  # P(a tau witness survives exclusion + docset)
-        if within_docs is not None:
-            # the docset knocks out witnesses exactly like exclusion
-            # does; its selectivity is EXACT (one narrow count job on
-            # the pushed-down scan), so the same deeper-tau formula
-            # applies with survival |S|/n. Correctness never depends
-            # on this estimate — the a-posteriori verification below
-            # covers any filter/term correlation.
-            n_within = within_docs.count()
-            if n_within == 0:
-                return _cache_df(_empty_results(spark))
-            keep_frac = min(1.0, n_within / max(n_docs, 1))
-        if neg:
-            # excluded docs can knock out up to sum(df_neg)/n of tau's
-            # witnesses; ask for proportionally deeper top_wands so ~k
-            # survive DESPITE binomial noise (margin 4*sqrt(k)+4 puts the
-            # shortfall probability well under 1%; a bare k/(1-rate) was
-            # measured to fall back ~25% of the time). Beyond the stored
-            # top_wands depth, impact ladders extend tau to any k_eff
-            # (so even "physics -the", k_eff ~ 1300, forms a tau); the
-            # a-posteriori verification below keeps it exact either way.
-            # no cap on neg_rate: impact ladders form a tau at ANY depth,
-            # and an impossible depth (rate -> 1, k_eff > corpus) simply
-            # yields no tau -> exhaustive. The old 0.98 cap (from the
-            # K_TOP-only era) made "-<99%-df term>" ask for a tau 5x too
-            # shallow and pay a guaranteed verify-fallback double scan.
-            neg_rate = min(1.0 - 1e-9, sum(dfs.get(t) or 0 for t in neg) / max(n_docs, 1))
-            keep_frac *= 1.0 - neg_rate  # independence heuristic only —
-            # k_eff tunes the FALLBACK RATE, never correctness
-        if keep_frac < 1.0:
-            keep_frac = max(keep_frac, 1e-9)
-            k_eff = math.ceil((k + 4.0 * math.sqrt(k) + 4.0) / keep_frac)
-        thetas, tau = _wand_thetas(live, idf_map, bstats, k_eff, ratio, int(st["cfg"].get("block_size") or 128))
-        if thetas is not None and live_less:
-            # '~less' correction: tau_base lower-bounds the k-th best
-            # POSITIVE sum (k distinct witness docs); each witness loses
-            # at most sum_t(idf_t * ub_wand_t) to the penalties, so
-            # tau_base - sum(UB_less) lower-bounds the k-th best FINAL
-            # score, and a top-k doc's positive sum >= its final >= tau.
-            # The positive-side block filter argument then applies
-            # verbatim; penalties are always decoded in full, so every
-            # kept doc's final score is exact.
-            bl = _term_block_stats(spark, st, wh, live_less)
-            if all(t in bl for t in live_less):
-                ub_corr_l = max(1.0, ratio)
-                tau -= sum(
-                    _idf(n_docs, dfs[t]) * bl[t]["ub_wand"] * ub_corr_l for t in live_less
-                )
-                ub_pos = {t: idf_map[t] * bstats[t]["ub_wand"] * ub_corr_l for t in live}
-                thetas = _thetas_for_tau(live, idf_map, ub_pos, sum(ub_pos.values()), tau, ub_corr_l)
-            else:
-                thetas, tau = None, float("-inf")
-        if thetas is not None:
-            ub_corr = max(1.0, ratio)
-            imp = _impact_terms(spark, st, wh)
-            hot_live = [t for t in live if t in imp]
-            cold_live = [t for t in live if t not in imp]
-            ub = {t: idf_map[t] * bstats[t]["ub_wand"] * ub_corr for t in live}
-            # probe gate: (a) the single-term tau leaves some hot term
-            # essentially unpruned (even its K_TOP-th best block survives)
-            # AND (b) at most two terms carry the upper-bound mass — with
-            # >=3 balanced hot terms NO tau can prune (theta_t =
-            # (tau - UB_others)/idf_t stays below every block max because
-            # UB_others alone approaches any achievable tau), so the probe
-            # job would be pure overhead (measured +0.5s on 3-term queries)
-            weak = any(
-                t in imp
-                and bstats[t]["n_blocks"] > 2 * len(bstats[t]["top_wands"])
-                and thetas[t] <= bstats[t]["top_wands"][-1]
-                for t in live
-            )
-            ubs_sorted = sorted(ub.values(), reverse=True)
-            two_term_shaped = sum(ubs_sorted[2:]) <= 0.15 * (sum(ubs_sorted[:2]) or 1.0)
-            est_postings = sum(bstats[t]["n_blocks"] for t in live) * int(
-                st["cfg"].get("block_size") or 128
-            )
-            probe_worth = probe is True or (
-                probe == "auto" and est_postings >= _PROBE_MIN_POSTINGS
-            )
-            probed = False
-            if weak and two_term_shaped and len(live) > 1 and hot_live and probe_worth and not live_less:
-                probed = True
-                tau2 = _probe_tau(spark, st, hot_live, idf_map, avgdl, k_eff)
-                if tau2 > tau:
-                    tau = tau2
-                    thetas = _thetas_for_tau(live, idf_map, ub, sum(ub.values()), tau, ub_corr)
-            # cost check: bound how many blocks these thetas actually
-            # KEEP — per-term impact ladders give a 2x-tight upper bound
-            # for impact-routed terms, top_wands a sound one for cold
-            # terms (theta <= 0 always keeps everything; >=3 balanced
-            # hot terms always land there). If the bound covers most of
-            # the candidate blocks, the plain exhaustive scan is
-            # strictly cheaper than the filtered/routed plan (no filter
-            # evaluation, no union, no impact read) — measured 1.15s vs
-            # 1.37s on "of and" with the single-term tau at 600k docs.
-            # probe=True forces the routed plan regardless (callers use
-            # it to exercise/evidence the at-scale path).
-            est_kept = sum(_est_kept_blocks(bstats[t], thetas[t], t in imp) for t in live)
-            tot = sum(bstats[t]["n_blocks"] for t in live)
-            if probe is True or est_kept < 0.6 * tot:
-                # routed scan: hot terms read a tau-prefix of their
-                # impact-ordered copy, cold terms the doc_id-ordered blocks
-                blocks = _routed_blocks(st, live, thetas, imp)
-                if est_kept <= _COALESCE_MAX_KEPT:
-                    # a ~k-block scan over a many-partition relation
-                    # (auto-buckets grow with the corpus; warm_postings'
-                    # cached relation keeps one partition per scan
-                    # split) otherwise launches a python-runner task per
-                    # partition, nearly all empty — measured at 2.4M
-                    # docs/65 buckets: pruned "the" paid 4+ waves of
-                    # empty decode round trips. coalesce is narrow
-                    # (no shuffle) and row-preserving.
-                    blocks = blocks.coalesce(4)
-                pruned = True
-            if _stats is not None:
-                # plan-choice observability (the --strats analog records
-                # WHAT the cost-based planner decided and on what numbers)
-                _stats["plan"] = ("routed+probe" if probed else "routed") if pruned else "exhaustive"
-                _stats["est_kept_blocks"] = est_kept
-    elif prune and mode == "and" and len(live) >= 2:
-        # Conjunctive pruning (VERDICT r4 #7), two exact plans by shape:
-        #
-        # 1. CANDIDATE-DRIVEN (selective AND, 'w0003 the'): the rarest
-        #    term's ids bound the result set; other terms' blocks are
-        #    range-semi-joined against them before any decode ->
-        #    O(df_rare) whatever the other terms' df. No tau involved.
-        # 2. PROBE TAU (conjunctive stopword pair, 'of and'): the k-th
-        #    best ALL-TERMS-HIT partial sum over a one-job prefix scan
-        #    lower-bounds the true conjunctive k-th best, and the OR
-        #    block filter (theta_t from the SUM of all terms' UBs)
-        #    applies verbatim: a true-AND doc with score >= tau keeps
-        #    every block (exact score AND complete hit count -> it
-        #    survives the n_terms_hit filter), while any doc that lost a
-        #    block has true score < tau and either fails the hit filter
-        #    or ranks below the >= k exact docs. Unlike negation, tau's
-        #    validity is a-priori — no verify-and-fallback needed.
-        #
-        # AND+neg composes with plan 1 ONLY (VERDICT r5 #6): the
-        # candidate-driven plan enumerates EVERY conjunctive match with
-        # a complete, exact score (each term's blocks that can contain a
-        # rare-term id survive the range semi-join), so dropping excluded
-        # docs afterwards — kernel docset, range-anti, or anti-join,
-        # whichever the exclusion planner picked — leaves every survivor
-        # exact and removes nothing that belongs: exact with NO tau and
-        # no verification step. Plan 2's tau is a-priori valid only for
-        # the UNfiltered conjunctive k-th best, so AND+neg shapes that
-        # miss plan 1's selectivity gate stay exhaustive. AND+less (r7)
-        # composes with plan 1 by the same argument as AND+neg: every
-        # conjunctive match carries a complete exact positive score, and
-        # the '~less' penalties are always decoded in full and
-        # subtracted afterwards — exact final scores for the entire
-        # conjunctive result set, no tau, no verification. Plan 2 stays
-        # gated on no-less (its tau has no less correction here).
-        # Single-term AND == OR and is handled above.
-        and_blocks = _and_candidate_blocks(spark, wh, st, live, dfs)
-        if and_blocks is not None:
-            blocks = and_blocks
-            pruned = True
-            if _stats is not None:
-                suffix = ("+neg" if neg else "") + ("+less" if live_less else "")
-                _stats["plan"] = "and-candidate" + suffix
-        elif neg or live_less:
-            pass  # probe-tau plan is unsound under exclusion and has no
-            # less correction on this path: exhaustive
-        else:
-            bstats = _term_block_stats(spark, st, wh, live)
-            ratio = avgdl / max(float(st["cfg"].get("wand_avgdl") or avgdl), 1e-9)
-            bsz = int(st["cfg"].get("block_size") or 128)
-            est_postings = sum(bstats[t]["n_blocks"] for t in live if t in bstats) * bsz
-            probe_worth = probe is True or (
-                probe == "auto" and est_postings >= _PROBE_MIN_POSTINGS
-            )
-            # within COMPOSES with this plan (r7): the probe tau is
-            # a-priori valid for the UNFILTERED conjunctive k-th best,
-            # so under a docset filter the probe asks for proportionally
-            # deeper witnesses (same k_eff formula as the OR path) and
-            # the generic a-posteriori verification below (surviving
-            # k-th score >= tau, else exhaustive rerun) makes the
-            # filtered result exact at any filter/term correlation.
-            if all(t in bstats for t in live) and probe_worth:
-                k_eff_and = k
-                if within_docs is not None:
-                    n_within = within_docs.count()
-                    if n_within == 0:
-                        return _cache_df(_empty_results(spark))
-                    keep = max(min(1.0, n_within / max(n_docs, 1)), 1e-9)
-                    k_eff_and = math.ceil((k + 4.0 * math.sqrt(k) + 4.0) / keep)
-                tau = _probe_tau_and(spark, st, wh, live, idf_map, avgdl, k_eff_and)
-                if tau > float("-inf"):
-                    ub_corr = max(1.0, ratio)
-                    ub = {t: idf_map[t] * bstats[t]["ub_wand"] * ub_corr for t in live}
-                    thetas = _thetas_for_tau(live, idf_map, ub, sum(ub.values()), tau, ub_corr)
-                    imp = _impact_terms(spark, st, wh)
-                    est_kept = sum(
-                        _est_kept_blocks(bstats[t], thetas[t], t in imp) for t in live
-                    )
-                    tot = sum(bstats[t]["n_blocks"] for t in live)
-                    if probe is True or est_kept < 0.6 * tot:
-                        blocks = _routed_blocks(st, live, thetas, imp)
-                        pruned = True
-                        if _stats is not None:
-                            _stats["plan"] = "and-probe"
-                            _stats["est_kept_blocks"] = est_kept
-    if _stats is not None:
-        _stats.setdefault("plan", "exhaustive")
-        _stats["tau"] = None if tau == float("-inf") else tau
-        from pyspark.sql import Observation
-
-        obs = Observation(f"qstats_{uuid.uuid4().hex[:12]}")
-        blocks = blocks.observe(
-            obs,
-            F.count(F.lit(1)).alias("blocks_decoded"),
-            F.sum("n_docs").alias("postings_decoded"),
-        )
-        _stats["_obs"] = obs
-
-    def _mk_topk(blocks_df: DataFrame) -> DataFrame:
-        """Final top-k over a block relation — shared by the first
-        attempt and the verification fallback so '~less' penalties are
-        applied IDENTICALLY on both (the old fallback predated pruned
-        less-composition and would have dropped penalties)."""
-        partials = _decode_score_partials(blocks_df, idf_map, avgdl, excl_bc)
-        if not live_less:
-            return _agg_topk(
-                partials, len(live), mode, neg_docs, k, within_docs,
-                unique_docs=_docs_unique(st, live),
-            )
-        less_idf = {t: _idf(n_docs, dfs[t]) for t in live_less}
-        less_partials = _decode_score_partials(
-            _postings_for(spark, wh, st, live_less), less_idf, avgdl
-        )
-        penalties = less_partials.groupBy("doc_id").agg(F.sum("score").alias("penalty"))
-        agg = partials.groupBy("doc_id").agg(
-            F.sum("score").alias("score"), F.sum("hits").alias("n_terms_hit")
-        )
-        if mode == "and":
-            agg = agg.filter(F.col("n_terms_hit") == len(live))
-        if neg_docs is not None:
-            agg = agg.join(neg_docs, "doc_id", "left_anti")
-        if within_docs is not None:
-            agg = agg.join(within_docs, "doc_id", "left_semi")
-        agg = agg.join(penalties, "doc_id", "left").withColumn(
-            "score", F.col("score") - F.coalesce(F.col("penalty"), F.lit(0.0))
-        )
-        return agg.select("doc_id", "score").orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-    if not pruned and _docs_unique(st, live):
-        # zero-exchange single-term exhaustive path: parallelize the
-        # decode of a hot term's single-partition block scan (see
-        # _fan_out_blocks — bit-identical, volume-gated)
-        blocks = _fan_out_blocks(spark, blocks, dfs[live[0]])
-
-    topk = _mk_topk(blocks)
-
-    needs_verify = pruned and (neg or within_docs is not None) and tau > float("-inf")
-    if needs_verify and pkey is not None:
-        # memoize the PRE-verification plan + tau (+ a lazy exhaustive
-        # fallback builder): a repeated call re-executes the pruned job
-        # and the a-posteriori check every time — plan reuse, not
-        # result reuse
-        _plan_cache_put(
-            st,
-            pkey,
-            {
-                "kind": "verify", "pre": topk, "tau": tau, "k": k,
-                "with_url": bool(with_url), "root": wh.root,
-                "fallback_fn": lambda: _mk_topk(_postings_for(spark, wh, st, live)),
-            },
-        )
-    if needs_verify:
-        # A-POSTERIORI VERIFICATION (exactness proof for pruned negation):
-        # every kept doc with POSITIVE-sum score >= tau has ALL its
-        # blocks kept (the block filter keeps any block whose bound
-        # reaches tau), so its score is exact; every pruned-away doc has
-        # true positive sum < tau. With '~less' composed, tau was ALSO
-        # lowered by the less terms' total upper bound, so a surviving
-        # FINAL score (positive - penalty, penalties always decoded in
-        # full) >= tau still implies every pruned doc ranks strictly
-        # below (its final <= its positive < tau). If the surviving
-        # top-k's k-th score >= tau, the k results are exact and nothing
-        # pruned can displace or tie them. On a shortfall (too many
-        # witnesses excluded) rerun exhaustively — the fallback rate is
-        # df-bounded by the k_eff choice above and recorded in
-        # query_metrics.
-        rows = topk.collect()
-        if len(rows) == k and float(rows[-1]["score"]) >= tau:
-            if _stats is not None:
-                _stats["prune_verified"] = True
-            # rows are already (score DESC, doc_id ASC); a LocalRelation
-            # preserves insertion order on collect, and re-sorting 10 rows
-            # through orderBy would cost a range-partitioning sampling job
-            topk = _values_df(
-                spark,
-                [f"({int(r['doc_id'])}L, {_sql_double(r['score'])})" for r in rows],
-                "doc_id, score",
-            )
-        else:
-            blocks = _postings_for(spark, wh, st, live)
-            if _stats is not None:
-                _stats["prune_fallback"] = True
-                from pyspark.sql import Observation
-
-                obs = Observation(f"qstats_fb_{uuid.uuid4().hex[:12]}")
-                blocks = blocks.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("blocks_decoded"),
-                    F.sum("n_docs").alias("postings_decoded"),
-                )
-                _stats["_obs"] = obs
-            topk = _mk_topk(blocks)
-
-    if with_url:
-        topk = _attach_url(spark, st, wh.root, topk)
-    if not needs_verify:
-        return _cache_df(topk)
-    return topk
+            return _replay_cached_search(spark, st, pkey, hit)
+    within_docs = _within_docs(spark, wh, within)
+    plan = plan_query(spark, wh, query, k=k, mode=mode, prune=prune, probe=probe, within=within_docs)
+    return _execute_plan(spark, wh, st, plan, within_docs, with_url, pkey=pkey)[0]
 
 
 def batch_search(
@@ -1629,10 +1553,11 @@ def batch_search(
     or unprunable query drags the shared scan toward exhaustive for
     every query ("the -biology" anchors theta["the"] at -inf and the
     whole 25-query reference batch decodes the stopword in full — the
-    r5 758 ms/query regression). The planner therefore estimates, per
-    query, its own single-query pruned cost (est_own, the blocks
-    search()'s WAND would decode — for '-neg' queries at the deepened
-    k_eff search() uses) against its marginal cost on the shared scan,
+    r5 758 ms/query regression). The planner therefore weighs, per
+    query, its own single-query cost (est_own, read off the QueryPlan
+    search() would run: the blocks its thetas keep when it routes, all
+    its blocks when its cost check picks exhaustive) against its
+    marginal cost on the shared scan,
     and greedily pulls out queries whose removal saves more than
     est_own + _ROUTE_OUT_BLOCK_COST. Routed queries score through
     search() (pruned, per-query-exact, including its a-posteriori neg
@@ -1722,16 +1647,10 @@ def batch_search(
         return _bcache_df(_empty_batch_results(spark))
     idf_map = {t: _idf(n_docs, dfs[t]) for t in live}
 
-    within_docs = None
-    if within is not None:
-        if isinstance(within, str):
-            within_docs = (
-                catalog.read_table(spark, wh.root, "docs")
-                .filter(F.expr(within))
-                .select("doc_id")
-            )
-        else:
-            within_docs = within.select("doc_id")
+    within_docs = _within_docs(spark, wh, within)
+
+    def qstr_of(qid: str) -> str:
+        return " ".join(qmap[qid] + ["-" + t for t in qneg[qid]] + ["~" + t for t in qless[qid]])
 
     # ---- per-query WAND thetas + route-out decision -------------------
     # The shared scan decodes each term ONCE under the union (min) of
@@ -1746,102 +1665,61 @@ def batch_search(
     # saving until none clears the fixed cost of an extra plan subtree;
     # routed queries score through search() (pruned, single-query-exact)
     # and union back in — still ONE action, per-query top-k unchanged.
+    # Every per-query figure comes from plan_query — the plan search()
+    # would run (probe=False: the estimator launches no probe jobs):
+    # its composed tau and thetas feed the shared scan (queries with
+    # '-neg' stay unprunable in-batch — the shared scan has no batched
+    # analog of search()'s a-posteriori verification — but ROUTABLE:
+    # "the -biology" otherwise anchors "the" at full decode for the
+    # whole batch, the r5 758 ms/query regression's root shape), and its
+    # cost (kept blocks when it routes, all candidate blocks when its
+    # cost check picks exhaustive) is est_own.
+    #
+    # within COMPOSES with the batch-pruned shared scan (r7): per-query
+    # thetas form at a filter-deepened depth and a BATCHED a-posteriori
+    # verification below checks every pruned query's k-th surviving
+    # score against its tau, rerunning only the failures.
     plan, blocks_total = "exhaustive", None
-    theta_map: dict[str, dict[str, float] | None] = {}
+    theta_map: dict[str, dict[str, float]] = {}
     tau_map: dict[str, float] = {}
-    est_own: dict[str, float] = {}
+    est_own: dict[str, int] = {}
     bstats = None
     imp: set = set()
-    # within COMPOSES with the batch-pruned shared scan (r7): per-query
-    # thetas form at a filter-deepened depth (the batch-global docset's
-    # keep fraction, same k_eff formula as search()) and a BATCHED
-    # a-posteriori verification below checks every pruned query's k-th
-    # surviving score against its tau, rerunning only the failures —
-    # shared-scan amortization with per-query exactness.
-    k_theta, keep_within = k, 1.0
     if prune and mode == "or":
         bstats = _term_block_stats(spark, st, wh, live)
         if not all(t in bstats for t in live):
             bstats = None
-        if bstats is not None and within_docs is not None:
+    if bstats is not None:
+        n_within = None
+        if within_docs is not None:
             n_within = within_docs.count()
             if n_within == 0:
                 return _empty_batch_results(spark)
-            keep_within = max(min(1.0, n_within / max(n_docs, 1)), 1e-9)
-            k_theta = math.ceil((k + 4.0 * math.sqrt(k) + 4.0) / keep_within)
-    if bstats is not None:
-        ratio = avgdl / max(float(st["cfg"].get("wand_avgdl") or avgdl), 1e-9)
-        bsz = int(st["cfg"].get("block_size") or 128)
         imp = _impact_terms(spark, st, wh)
-        live_less_all = [t for t in all_less if t in dfs]
-        bless = _term_block_stats(spark, st, wh, live_less_all) if live_less_all else {}
         for qid, ts in qmap.items():
-            lq = [t for t in ts if t in dfs]
-            if not lq:
+            if not any(t in dfs for t in ts):
                 continue
-            thetas = None
-            route_thetas = None
-            lless = [t for t in qless[qid] if t in dfs]
+            qp = plan_query(
+                spark, wh, qstr_of(qid), k=k, probe=False, within=within_docs, n_within=n_within
+            )
+            if qp.thetas is None:
+                continue
             if not qneg[qid]:
-                idf_q = {t: idf_map[t] for t in lq}
-                thetas, _tau = _wand_thetas(lq, idf_q, bstats, k_theta, ratio, bsz)
-                if thetas is not None and lless:
-                    # same correction as search(): tau lower-bounds the
-                    # k-th best POSITIVE sum; each witness loses at most
-                    # sum(UB_less) to penalties, so tau - sum(UB_less)
-                    # lower-bounds the k-th best FINAL score
-                    if all(t in bless for t in lless):
-                        ubc = max(1.0, ratio)
-                        _tau -= sum(
-                            _idf(n_docs, dfs[t]) * bless[t]["ub_wand"] * ubc for t in lless
-                        )
-                        ub_pos = {t: idf_q[t] * bstats[t]["ub_wand"] * ubc for t in lq}
-                        thetas = _thetas_for_tau(lq, idf_q, ub_pos, sum(ub_pos.values()), _tau, ubc)
-                    else:
-                        thetas = None
-                route_thetas = thetas
-            else:
-                # '-neg' (and, r8, neg+less) query: UNPRUNABLE in-batch
-                # (its shared-scan theta stays -inf — the shared scan has
-                # no batched analog of search()'s a-posteriori
-                # verification) but ROUTABLE: search() prunes it with the
-                # df-aware deeper tau + verify, composing the '~less'
-                # correction exactly as its own planner does. One such
-                # query otherwise anchors its positive terms at full
-                # decode for the WHOLE batch ("the -biology" forces
-                # "the" exhaustive for all 25 reference queries — the r5
-                # 758 ms/query regression's root shape; VERDICT r7 #6
-                # closed the same hole for the neg+less compound shape).
-                # Estimate its routed cost with the same composed plan
-                # search() runs: k_eff deepening for the exclusion, tau
-                # lowered by the less terms' upper bound.
-                neg_rate = min(
-                    1.0 - 1e-9,
-                    sum(dfs.get(t) or 0 for t in qneg[qid]) / max(n_docs, 1),
-                )
-                keep = max(1.0 - neg_rate, 1e-9)
-                k_eff = math.ceil((k + 4.0 * math.sqrt(k) + 4.0) / keep)
-                idf_q = {t: idf_map[t] for t in lq}
-                rt, _tau_r = _wand_thetas(lq, idf_q, bstats, k_eff, ratio, bsz)
-                if rt is not None and lless:
-                    if all(t in bless for t in lless):
-                        ubc = max(1.0, ratio)
-                        _tau_r -= sum(
-                            _idf(n_docs, dfs[t]) * bless[t]["ub_wand"] * ubc for t in lless
-                        )
-                        ub_pos = {t: idf_q[t] * bstats[t]["ub_wand"] * ubc for t in lq}
-                        rt = _thetas_for_tau(lq, idf_q, ub_pos, sum(ub_pos.values()), _tau_r, ubc)
-                    else:
-                        rt = None
-                route_thetas = rt
-            theta_map[qid] = thetas
-            if thetas is not None:
-                tau_map[qid] = _tau  # composed (post-less-correction) tau
-                # — consumed by the within verification below
-            if route_thetas is not None:
-                est_own[qid] = sum(
-                    _est_kept_blocks(bstats[t], route_thetas[t], t in imp) for t in lq
-                )
+                theta_map[qid], tau_map[qid] = qp.thetas, qp.tau
+            est_own[qid] = qp.cost
+
+    def theta_union(excl) -> dict[str, float]:
+        """Shared-scan thetas over the queries NOT in excl: per term the
+        min over queries, -inf for a query without thetas."""
+        th: dict[str, float] = {}
+        for qid, ts in qmap.items():
+            if qid in excl:
+                continue
+            thetas = theta_map.get(qid)
+            for t in ts:
+                if t in dfs:
+                    th[t] = min(th.get(t, float("inf")), thetas[t] if thetas is not None else float("-inf"))
+        return th
 
     routed_out: list[str] = []
     if bstats is not None and est_own:
@@ -1853,24 +1731,8 @@ def batch_search(
             as saving when the executed plan actually shrinks. (The r5
             regression's shape: removing 'the -biology' doesn't help
             while another query still holds 'the' in an exhaustive scan.)"""
-            th: dict[str, float] = {}
-            for qid, ts in qmap.items():
-                if qid in excl:
-                    continue
-                lq = [t for t in ts if t in dfs]
-                if not lq:
-                    continue
-                thetas = theta_map.get(qid)
-                for t in lq:
-                    th[t] = min(
-                        th.get(t, float("inf")),
-                        thetas[t] if thetas is not None else float("-inf"),
-                    )
-            if not th:
-                return 0.0
-            est = sum(_est_kept_blocks(bstats[t], th[t], t in imp) for t in th)
-            tot = sum(bstats[t]["n_blocks"] for t in th)
-            return est if est < 0.6 * tot else tot
+            est, tot = _est_cost(bstats, theta_union(excl), imp)
+            return est if est < _ROUTED_MAX_KEPT_FRAC * tot else tot
 
         base = _shared_cost(set())
         while True:
@@ -1892,11 +1754,7 @@ def batch_search(
     if routed_out:
         parts = []
         for qid in routed_out:
-            qstr = " ".join(
-                qmap[qid]
-                + ["-" + t for t in qneg[qid]]
-                + ["~" + t for t in qless[qid]]
-            )
+            qstr = qstr_of(qid)
             routed_specs.append((qid, qstr))
             # within rides along: the routed query must honor the same
             # batch-global docset (search prunes + verifies it itself)
@@ -1932,33 +1790,16 @@ def batch_search(
 
     blocks = _postings_for(spark, wh, st, live)
     if bstats is not None and live:
-        theta_u: dict[str, float] = {}
-        for qid, ts in qmap.items():
-            thetas = theta_map.get(qid)
-            for t in ts:
-                if t in dfs:
-                    theta_u[t] = min(
-                        theta_u.get(t, float("inf")),
-                        thetas[t] if thetas is not None else float("-inf"),
-                    )
-        est_kept = sum(_est_kept_blocks(bstats[t], theta_u[t], t in imp) for t in live)
-        blocks_total = sum(bstats[t]["n_blocks"] for t in live)
-        if est_kept < 0.6 * blocks_total:
+        theta_u = theta_union(())
+        est_kept, blocks_total = _est_cost(bstats, theta_u, imp)
+        if est_kept < _ROUTED_MAX_KEPT_FRAC * blocks_total:
             blocks = _routed_blocks(st, live, theta_u, imp)
             plan = "routed-batch"
     if routed_out:
         plan = f"{plan}+routed-out:{len(routed_out)}"
     if _stats is not None:
         _stats.update({"plan": plan, "blocks_total": blocks_total, "routed_out": list(routed_out)})
-        from pyspark.sql import Observation
-
-        obs = Observation(f"bstats_{uuid.uuid4().hex[:12]}")
-        blocks = blocks.observe(
-            obs,
-            F.count(F.lit(1)).alias("blocks_decoded"),
-            F.sum("n_docs").alias("postings_decoded"),
-        )
-        _stats["_obs"] = obs
+        blocks, _stats["_obs"] = _observe_blocks(blocks, "bstats")
 
     scored = _decode_score_terms(blocks, idf_map, avgdl)
     joined = scored.join(F.broadcast(qterms), "term")
@@ -2094,13 +1935,8 @@ def batch_search(
             _stats["within_verified"] = len(tau_map) - len(redo)
             _stats["within_fallbacks"] = list(redo)
         for qid in redo:
-            qstr = " ".join(
-                qmap[qid]
-                + ["-" + t for t in qneg[qid]]
-                + ["~" + t for t in qless[qid]]
-            )
             fixed = search(
-                spark, wh, qstr, k=k, mode=mode, prune=False, within=within_docs
+                spark, wh, qstr_of(qid), k=k, mode=mode, prune=False, within=within_docs
             ).collect()
             by_q[qid] = [
                 {"query_id": qid, "doc_id": r["doc_id"], "score": r["score"]} for r in fixed
@@ -2226,31 +2062,41 @@ def search_with_stats(
 ) -> tuple[list, dict]:
     """Run a search eagerly and record per-query metrics — the analog of
     the reference's --stats surface (cli.rs:14-56 per-op stats, dump at
-    cli.rs:510-512): blocks decoded vs total, postings decoded, wall ms.
+    cli.rs:510-512): the plan (kind, tau, estimated blocks), blocks
+    decoded vs total, postings decoded, verify outcome, wall ms.
     Returns (rows, stats_dict); also appends a row to query_metrics.
     prune/probe default to MATCH search()'s defaults — the instrumented
-    path must measure the same plan a production search runs."""
+    path must measure the same plan a production search runs. Bypasses
+    the plan memo."""
     wh = warehouse if isinstance(warehouse, Warehouse) else Warehouse(warehouse)
     st = _wh_state(spark, wh)
-    info: dict = {}
     t0 = time.time()
-    rows = search(
-        spark, wh, query, k=k, mode=mode, prune=prune, probe=probe, within=within, _stats=info
-    ).collect()
-    info["wall_ms"] = (time.time() - t0) * 1000.0
-    obs = info.pop("_obs", None)
+    within_docs = _within_docs(spark, wh, within)
+    plan = plan_query(spark, wh, query, k=k, mode=mode, prune=prune, probe=probe, within=within_docs)
+    topk, run = _execute_plan(spark, wh, st, plan, within_docs, with_url=False, observe=True)
+    rows = topk.collect()
+    info = {
+        "query": plan.query, "k": k, "mode": mode, "prune": prune, "terms": list(plan.live),
+        "plan": plan.label, "tau": None if plan.tau == float("-inf") else plan.tau,
+        "wall_ms": (time.time() - t0) * 1000.0,
+    }
+    if within is not None:
+        info["within"] = within if isinstance(within, str) else "<docset>"
+    if plan.neg_plan:
+        info["neg_plan"] = plan.neg_plan
+    if plan.est_kept is not None:
+        info["est_kept_blocks"] = plan.est_kept
+    obs, obs_neg = run.pop("_obs", None), run.pop("_obs_neg", None)
+    info.update(run)
     empty = len(rows) == 0
     info["blocks_decoded"], info["postings_decoded"] = _obs_counts(obs, known_empty=empty)
-    obs_neg = info.pop("_obs_neg", None)
     if obs_neg is not None:
         info["neg_ids_decoded"] = _obs_counts(
             obs_neg, ("neg_ids",), known_empty=empty, allow_eliminated=True
         )[0]
-    bstats = _term_block_stats(spark, st, wh, info.get("terms") or [])
+    bstats = _term_block_stats(spark, st, wh, list(plan.live))
     info["blocks_total"] = int(sum(b["n_blocks"] for b in bstats.values())) or None
     info["rows_returned"] = len(rows)
-    if info.get("neg_plan"):  # e.g. "routed+docset-kernel" / "exhaustive+anti-join"
-        info["plan"] = f"{info.get('plan', 'exhaustive')}+{info['neg_plan']}"
     _write_query_metrics(wh, info)
     return rows, info
 
@@ -2267,11 +2113,8 @@ def batch_search_with_stats(
     query_metrics row per batch query (shared blocks/wall — the batch
     amortizes the scan, so per-query attribution is the batch total,
     flagged by the 'batch:' prefix). Returns (rows, stats)."""
-    from pyspark.sql import Observation
-
     wh = warehouse if isinstance(warehouse, Warehouse) else Warehouse(warehouse)
     items = list(queries.items()) if isinstance(queries, dict) else [(f"q{i}", q) for i, q in enumerate(queries)]
-    obs = Observation(f"batch_{uuid.uuid4().hex[:12]}")
     binfo: dict = {}
     # wall timer starts BEFORE batch_search(): routed-out queries execute
     # EAGERLY inside it (search()'s planning jobs, probes, and the
@@ -2280,7 +2123,7 @@ def batch_search_with_stats(
     # exactly the work route-out adds (ADVICE r6)
     t0 = time.time()
     out = batch_search(spark, wh, dict(items), k=k, mode=mode, prune=prune, _stats=binfo)
-    out = out.observe(obs, F.count(F.lit(1)).alias("rows_out"))
+    out, obs = _observe_blocks(out, "batch", F.count(F.lit(1)).alias("rows_out"))
     rows = out.collect()
     wall = (time.time() - t0) * 1000.0
     per_q: dict[str, int] = {}
@@ -2334,19 +2177,24 @@ def plan_summary(
     prune: bool = True,
 ) -> str:
     """The `--strats` analog (reference summarize_runs cli.rs:326-341,
-    dispatch cli.rs:439-441): a human-readable description of the planned
-    query — terms, buckets, dfs, WAND bounds — without running it."""
+    dispatch cli.rs:439-441): a human-readable rendering of the
+    QueryPlan search() would execute (default probe, no within) — terms,
+    buckets, dfs, WAND bounds, the exclusion plan — ending in one
+    `plan: <kind> tau=<tau>` line that equals search_with_stats'
+    plan and tau. Planning may run the probe job, as search() would;
+    the query itself does not run."""
     wh = warehouse if isinstance(warehouse, Warehouse) else Warehouse(warehouse)
     st = _wh_state(spark, wh)
     if _needs_rewrite(query):
         expanded = expand_wildcards(spark, wh, query)
         summary = plan_summary(spark, wh, expanded, k=k, mode=mode, prune=prune)
         return f"rewrite: {query!r} -> {expanded!r}\n{summary}"
+    plan = plan_query(spark, wh, query, k=k, mode=mode, prune=prune)
     pos, neg, less = parse_query(query)
     n_docs = int(st["stats"]["n_docs"])
     dfs = _term_dfs(spark, st, wh, pos + less + neg)
     buckets = _term_buckets(spark, st, pos + neg + less)
-    bstats = _term_block_stats(spark, st, wh, [t for t in pos if t in dfs]) if prune else {}
+    bstats = _term_block_stats(spark, st, wh, list(plan.live))
     lines = [f"query: {query!r}  k={k} mode={mode} prune={prune}  corpus n_docs={n_docs}"]
     for t in pos:
         if t not in dfs:
@@ -2355,56 +2203,41 @@ def plan_summary(
         idf = _idf(n_docs, dfs[t])
         line = f"  +{t}: df={dfs[t]} idf={idf:.4f} bucket={buckets[t]}"
         if t in bstats:
-            bs = bstats[t]
-            line += f" blocks={bs['n_blocks']} ub={idf * bs['ub_wand']:.4f}"
+            line += f" blocks={bstats[t]['n_blocks']} ub={idf * bstats[t]['ub_wand']:.4f}"
         lines.append(line)
     for t in less:
         lines.append(f"  ~{t}: df={dfs.get(t, 0)} (negative-weight scorer)")
-    sum_neg_all = sum(dfs.get(x) or 0 for x in neg)
-    live_pos = [t for t in pos if t in dfs]
+    route = {
+        "docset-kernel": "broadcast docset, kernel-side exclusion",
+        "range-anti": "range-pruned anti-join (excluded blocks semi-joined vs candidates)",
+        "anti-join": "LEFT ANTI, doc_ids-only decode",
+    }.get(plan.neg_plan, "not planned: no live positive term")
     for t in neg:
-        if (dfs.get(t) or 0) and sum_neg_all <= _NEG_DOCSET_MAX_POSTINGS:
-            route = "broadcast docset, kernel-side exclusion"
-        elif _neg_range_eligible(spark, wh, st, neg, dfs, live_pos):
-            route = "range-pruned anti-join (excluded blocks semi-joined vs candidates)"
-        else:
-            route = "LEFT ANTI, doc_ids-only decode"
         lines.append(f"  -{t}: bucket={buckets[t]} df={dfs.get(t, 0)} ({route})")
-    if prune:
-        live = [t for t in pos if t in dfs]
-        if mode == "and" and len(live) >= 2 and not less:
-            rare = _and_candidate_rare(spark, wh, st, live, dfs)
-            if rare is not None:
+    if plan.seed is not None:
+        lines.append(
+            f"  AND: candidate-driven (seed={plan.seed!r} df={dfs[plan.seed]}; other terms' "
+            "blocks range-semi-joined vs seed ids before decode)"
+            + (" composed with exclusion — exact scores precede the filter" if neg else "")
+        )
+    elif plan.thetas is not None:
+        lines.append(
+            f"  WAND: tau={plan.tau:.4f} ({'probe' if plan.probe else 'driver-side'}, "
+            f"k_eff={plan.k_eff}); thetas keep <= {plan.est_kept} of {plan.n_blocks} blocks -> "
+            + ("routed scan" if plan.routed else "exhaustive (cost check)")
+        )
+        if plan.routed:
+            for t in plan.live:
                 lines.append(
-                    f"  AND: candidate-driven (seed={rare!r} df={dfs[rare]}; other terms' "
-                    "blocks range-semi-joined vs seed ids before decode)"
-                    + (" composed with exclusion — exact scores precede the filter" if neg else "")
+                    f"    {t}: theta={plan.thetas[t]:.4f} "
+                    f"route={'impact-prefix' if t in plan.impact else 'doc-ordered'}"
                 )
-            elif neg:
-                # probe tau is a-priori valid only for the UNfiltered
-                # conjunctive k-th best — mirror search(): exhaustive
-                lines.append(
-                    "  AND+neg: exhaustive (no candidate seed; the conjunctive "
-                    "probe tau is unsound under exclusion)"
-                )
-            else:
-                lines.append(
-                    "  AND: probe-gated conjunctive tau (prefix scan of all terms, "
-                    "k-th best all-terms-hit sum) else exhaustive"
-                )
-            return "\n".join(lines)
-        idf_map = {t: _idf(n_docs, dfs[t]) for t in live}
-        avgdl_q = float(st["stats"]["avgdl"])
-        ratio = avgdl_q / max(float(st["cfg"].get("wand_avgdl") or avgdl_q), 1e-9)
-        thetas, tau = _wand_thetas(live, idf_map, bstats, k, ratio, int(st["cfg"].get("block_size") or 128))
-        if thetas is None:
-            lines.append("  WAND: no pruning applicable")
-        else:
-            imp = _impact_terms(spark, st, wh)
-            lines.append(f"  WAND: tau={tau:.4f} (driver-side)")
-            for t in live:
-                route = "impact-prefix" if t in imp else "doc-ordered"
-                lines.append(f"    {t}: theta={thetas[t]:.4f} route={route}")
+    elif prune and plan.kind is not None:
+        lines.append("  WAND: no pruning applicable")
+    if plan.needs_verify:
+        lines.append("  verify: k-th surviving score must reach tau, else exhaustive rerun")
+    tau = None if plan.tau == float("-inf") else plan.tau
+    lines.append(f"plan: {plan.label} tau={tau!r}")
     return "\n".join(lines)
 
 
@@ -2644,15 +2477,7 @@ def phrase_search(
     if within is not None:
         # AFTER df_count: the phrase idf stays corpus-global (within
         # filters candidates, never re-derives ranking stats)
-        if isinstance(within, str):
-            wdocs = (
-                catalog.read_table(spark, wh.root, "docs")
-                .filter(F.expr(within))
-                .select("doc_id")
-            )
-        else:
-            wdocs = within.select("doc_id")
-        matches = matches.join(wdocs, "doc_id", "left_semi")
+        matches = matches.join(_within_docs(spark, wh, within), "doc_id", "left_semi")
     idf = _idf(n_docs, df_count)
     denom = F.col("phrase_tf") + F.lit(K1) * (
         F.lit(1.0 - B) + F.lit(B) * F.col("doc_len") / F.lit(max(avgdl, 1e-9))

@@ -999,14 +999,31 @@ def test_and_probe_plan_prunes_stopword_pair(spark, wh, pyidx):
 
 
 def test_plan_summary_reports_and_plans(spark, wh):
-    """--strats parity for the conjunctive planner: plan_summary must
-    name the same AND plan search() will take."""
-    from lsearch_spark.query import plan_summary
+    """--strats parity: plan_summary renders the plan search() executes.
+    Its `plan:` line must equal search_with_stats' plan string (exclusion
+    plan included) and tau for every reference query and for the shapes
+    where separate planner copies once disagreed: single-term AND with
+    '~less', AND+less, k_eff-deepened negation taus, the cost check that
+    turns WAND thetas into an exhaustive scan."""
+    from lsearch_spark.query import plan_summary, search_with_stats
 
     s1 = plan_summary(spark, wh, "tiebreak the", mode="and")
     assert "candidate-driven" in s1 and "'tiebreak'" in s1, s1
+    # a stopword pair under AND: the probe is not worth its job at this
+    # size (and-probe is forced in test_and_probe_plan_prunes_stopword_pair)
     s2 = plan_summary(spark, wh, "the of", mode="and")
-    assert "conjunctive tau" in s2, s2
+    assert "plan: exhaustive tau=None" in s2, s2
+    shapes = [
+        ("biology ~chemistry", "and"), ("the of ~physics", "and"), ("the -physics", "or"),
+        ("physics -the", "or"), ("the of", "or"), ("of and the", "or"), ("the", "or"),
+        ("tiebreak the", "and"), ("the of", "and"),
+    ]
+    cases = [(q["query"], "or", q["k"]) for q in QUERIES] + [(q, m, 10) for q, m in shapes]
+    for q, m, k in cases:
+        _, info = search_with_stats(spark, wh, q, k=k, mode=m)
+        summary = plan_summary(spark, wh, q, k=k, mode=m)
+        line = next(x for x in summary.splitlines() if x.startswith("plan: "))
+        assert line == f"plan: {info.get('plan')} tau={info.get('tau')!r}", (q, m, summary)
 
 
 def test_bucket_layouts_equivalent(spark, tmp_path):

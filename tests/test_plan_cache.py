@@ -92,6 +92,38 @@ def test_verify_shape_reruns_check_per_call(spark, whc, pyidx):
     assert [r["doc_id"] for r in r2] == [d for d, _ in want]
 
 
+def test_verify_shortfall_memoizes_exhaustive_plan(spark, whc, pyidx, monkeypatch):
+    """ADVICE r8 #2: after a verify shortfall the memo holds the
+    exhaustive plan (exact unconditionally), so a repeat pays one job
+    instead of the pruned job, the check and the fallback again."""
+    import lsearch_spark.query as Q
+
+    real = Q._wand_thetas
+
+    def tau_above_every_score(live, idf_map, bstats, k, ratio=1.0, block_size=128):
+        thetas, tau = real(live, idf_map, bstats, k, ratio, block_size)
+        return (None, tau) if thetas is None else ({t: 1e9 for t in live}, 1e9)
+
+    monkeypatch.setattr(Q, "_wand_thetas", tau_above_every_score)
+    q, k = "the -physics", 7
+    out: dict = {}
+    n_first = _jobs_for(
+        spark, lambda: out.__setitem__("r1", search(spark, whc, q, k=k).collect()),
+        "plan-cache-shortfall-first",
+    )
+    hits = [v for kk, v in _WH_CACHE[whc.root]["plans"].items() if kk[:2] == (q, k)]
+    assert len(hits) == 1 and hits[0]["kind"] == "df", hits
+    n_replay = _jobs_for(
+        spark, lambda: out.__setitem__("r2", search(spark, whc, q, k=k).collect()),
+        "plan-cache-shortfall-replay",
+    )
+    assert n_replay < n_first, (n_replay, n_first)
+    want = bm25_topk(pyidx, q, k)
+    for rows in (out["r1"], out["r2"]):
+        assert [r["doc_id"] for r in rows] == [d for d, _ in want]
+        assert [r["score"] for r in rows] == pytest.approx([s for _, s in want], rel=1e-9)
+
+
 def test_batch_repeat_matches_and_reuses_plan(spark, whc, pyidx):
     qs = {"a": "physics data", "b": "the", "c": "quantum -the"}
     r1 = batch_search(spark, whc, qs, k=5).collect()

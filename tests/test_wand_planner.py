@@ -12,12 +12,20 @@ checked against ground truth computed directly from the postings:
 - _deep_kth_wand(k) returns v such that at least k DISTINCT docs truly
   score >= v from this term alone (the tau it feeds is a valid lower
   bound on the k-th best score at any depth).
+
+The planner gate tests at the end run query.plan_query with no
+SparkSession against a warehouse seeded only in the driver memo, and
+force each gate both ways by patching its threshold.
 """
 
+import types
+
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from lsearch_spark import query as Q
 from lsearch_spark.query import _deep_kth_wand, _est_kept_blocks
 
 BLOCK = 8  # small block size so tiny cases exercise partial tail blocks
@@ -119,3 +127,122 @@ def test_exclusion_mask_matches_isin(ids_l, ex_l):
         keep = np.ones(ids.size, dtype=bool)
     want = ~np.isin(ids, ex)
     assert np.array_equal(keep, want)
+
+
+# ------------------------------------------- planner gates, no SparkSession
+N_FAKE = 1000
+
+
+def _term(wands, impact: bool, seed: int = 0) -> dict:
+    """term_block_stats row for a term whose postings carry `wands`."""
+    salts = _mk_salts(np.asarray(wands, dtype=float), 2, seed)
+    maxima = sorted((float(b.max()) for blocks in salts for b in blocks), reverse=True)
+    return {
+        "n_blocks": len(maxima), "n_postings": len(wands), "ub_wand": maxima[0],
+        "top_wands": maxima[:16], "impact_ladder": _mk_ladder(salts) if impact else None,
+    }
+
+
+@pytest.fixture
+def fake_wh(monkeypatch):
+    """A warehouse that exists only as seeded driver memo: every planner
+    input is served from _WH_CACHE, so any Spark access would fail."""
+    bstats = {
+        "hot": _term(np.linspace(2.0, 0.5, 900), impact=True, seed=1),
+        "hot2": _term(np.linspace(2.0, 0.5, 800), impact=True, seed=2),
+        "rare": _term([1.5, 1.2], impact=False),
+        "mid": _term(np.linspace(1.5, 1.0, 9), impact=False),
+        "mid8": _term(np.linspace(1.5, 1.0, 8), impact=False),
+    }
+    root = "/nonexistent/fake-planner-wh"
+    monkeypatch.setitem(Q._WH_CACHE, root, {
+        "cfg": {"n_buckets": 4, "block_size": BLOCK, "n_salts": 2},
+        "stats": {"n_docs": N_FAKE, "avgdl": 10.0},
+        "plans": {}, "buckets": {},
+        "dfs": {t: b["n_postings"] for t, b in bstats.items()},
+        "bstats": bstats,
+        "postings_rel": types.SimpleNamespace(columns=["term", "min_doc_id", "max_doc_id"]),
+        "impact_terms": {"hot", "hot2"},
+    })
+    return root
+
+
+def _plan(root, q, **kw):
+    return Q.plan_query(None, root, q, **kw)
+
+
+def test_cost_check_gate_both_ways(fake_wh, monkeypatch):
+    p = _plan(fake_wh, "hot")
+    assert p.kind == "routed" and p.est_kept < Q._ROUTED_MAX_KEPT_FRAC * p.n_blocks, p
+    assert p.coalesce and p.impact == ("hot",)
+    monkeypatch.setattr(Q, "_COALESCE_MAX_KEPT", 0)
+    assert not _plan(fake_wh, "hot").coalesce
+    monkeypatch.setattr(Q, "_ROUTED_MAX_KEPT_FRAC", 0.0)
+    p = _plan(fake_wh, "hot")
+    assert p.kind == "exhaustive" and p.tau > float("-inf") and p.cost == p.n_blocks, p
+    assert _plan(fake_wh, "hot", probe=True).kind == "routed"  # probe=True forces routing
+
+
+def test_probe_gate_both_ways(fake_wh, monkeypatch):
+    calls = []
+
+    def probe_stub(spark, st, terms, imp, idf_map, avgdl, k, all_hit):
+        calls.append((tuple(terms), all_hit))
+        bs = st["bstats"]
+        return 0.99 * sum(idf_map[t] * bs[t]["ub_wand"] for t in terms)
+
+    monkeypatch.setattr(Q, "_probe_tau", probe_stub)
+    p = _plan(fake_wh, "hot hot2")
+    assert not p.probe and not calls and p.kind == "exhaustive", p
+    monkeypatch.setattr(Q, "_PROBE_MIN_POSTINGS", 0)
+    p = _plan(fake_wh, "hot hot2")
+    assert p.probe and calls == [(("hot", "hot2"), False)] and p.kind == "routed+probe", p
+    # the estimator's probe=False never asks for the job
+    assert not _plan(fake_wh, "hot hot2", probe=False).probe and len(calls) == 1
+
+
+@pytest.mark.parametrize(
+    "patch, query, kind",
+    [
+        ({}, "rare hot", "and-candidate"),
+        ({"_NEG_RANGE_MAX_CAND": 1}, "rare hot", "exhaustive"),
+        ({"_PHRASE_BNLJ_MAX": 0}, "rare hot", "exhaustive"),
+        ({}, "rare mid", "and-candidate"),  # df 9 > 4 x 2
+        ({}, "rare mid8", "exhaustive"),  # df 8 = 4 x 2: the prune can't pay
+        ({}, "rare hot -mid", "and-candidate+neg"),
+        ({}, "rare hot ~mid", "and-candidate+less"),
+    ],
+)
+def test_and_candidate_gate_both_ways(fake_wh, monkeypatch, patch, query, kind):
+    for name, value in patch.items():
+        monkeypatch.setattr(Q, name, value)
+    p = _plan(fake_wh, query, mode="and")
+    assert p.kind == kind, p
+    assert (p.seed == "rare") == kind.startswith("and-candidate")
+
+
+@pytest.mark.parametrize(
+    "patch, neg_plan",
+    [
+        ({}, "docset-kernel"),
+        ({"_NEG_DOCSET_MAX_POSTINGS": 0}, "range-anti"),
+        ({"_NEG_DOCSET_MAX_POSTINGS": 0, "_NEG_RANGE_MAX_CAND": 1}, "anti-join"),
+        ({"_NEG_DOCSET_MAX_POSTINGS": 0, "_PHRASE_BNLJ_MAX": 0}, "anti-join"),
+    ],
+)
+def test_exclusion_gates_both_ways(fake_wh, monkeypatch, patch, neg_plan):
+    for name, value in patch.items():
+        monkeypatch.setattr(Q, name, value)
+    p = _plan(fake_wh, "rare -hot")
+    assert p.neg_plan == neg_plan and p.label == f"{p.kind}+{neg_plan}", p
+    # an exclusion at least as large as the positive side x4 is what
+    # makes range-anti pay: 'hot -rare' never takes it
+    assert _plan(fake_wh, "hot -rare").neg_plan != "range-anti"
+
+
+def test_fan_out_gate_both_ways(fake_wh, monkeypatch):
+    assert _plan(fake_wh, "rare").kind == "exhaustive"
+    assert not _plan(fake_wh, "rare").fan_out
+    monkeypatch.setattr(Q, "_FAN_OUT_MIN_POSTINGS", 1)
+    assert _plan(fake_wh, "rare").fan_out
+    assert not _plan(fake_wh, "hot").fan_out  # routed: never fanned out
