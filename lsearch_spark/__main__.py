@@ -33,10 +33,6 @@ def main(argv: list[str] | None = None) -> int:
                    help="term-bucket count; 'auto' (default) sizes to the corpus "
                         "(ceil(n_docs/37.5k), floor 8) so per-bucket bytes stay "
                         "constant as data grows")
-    b.add_argument("--bucket-layout", choices=["compact", "aligned"], default="compact",
-                   help="'compact' (default): second repartition, one file per bucket "
-                        "(lowest query open cost); 'aligned': bucket-aligned merge key, "
-                        "no second shuffle of the posting volume (cluster-scale choice)")
     b.add_argument("--block-size", type=int, default=128)
     b.add_argument("--hot-df", type=int, default=100_000)
     b.add_argument("--salts", type=int, default=16)
@@ -122,7 +118,6 @@ def main(argv: list[str] | None = None) -> int:
             block_size=args.block_size, hot_df=args.hot_df,
             n_salts=args.salts, run_id=args.run_id,
             input_id=args.input_id or args.input, resume=not args.no_resume,
-            bucket_layout=args.bucket_layout,
         )
         print(f"index built at {args.warehouse}")
     elif args.cmd == "search":

@@ -451,172 +451,129 @@ def _make_block_mapper(block_size: int, avgdl: float):
         within = pcum[:-1] - np.repeat(pcum[starts], nd)
         pstart = np.repeat(p_offs[:-1], nd) + within
 
-        # ---- merge-sort postings by doc_id within each (term,salt) group ----
+        # idf-free BM25 factor per posting (elementwise, so the same bits
+        # in either emission order)
+        wand = tfs * (K1 + 1.0) / (tfs + K1 * (1.0 - B + B * dls / max(avgdl, 1e-9)))
         chunk_of = np.repeat(np.arange(nrows), nd)
         gid_p = gid_chunk[chunk_of]
-        order = np.lexsort((ids, gid_p))
-        ids_s, tfs_s, dls_s = ids[order], tfs[order], dls[order]
-        g_s, ch_s = gid_p[order], chunk_of[order]
+        names = [f.name for f in BLOCK_SCHEMA.fields]
 
-        gchg = np.flatnonzero(g_s[1:] != g_s[:-1]) if n_post > 1 else np.array([], dtype=np.int64)
-        gstarts = np.concatenate(([0], gchg + 1))
-        gends = np.concatenate((gstarts[1:], [n_post]))
+        def emit(order, kind):
+            """One record batch of `kind` blocks over the postings `order`
+            selects, already in emission order and contiguous per group:
+            block_size-posting blocks per (term, salt) group, doc ids
+            delta-gapped from each block start, segmented varints."""
+            ids_s, tfs_s, dls_s, w_s = ids[order], tfs[order], dls[order], wand[order]
+            g_s, ch_s = gid_p[order], chunk_of[order]
+            n = len(order)
+            gchg = np.flatnonzero(g_s[1:] != g_s[:-1]) if n > 1 else np.array([], dtype=np.int64)
+            gstarts = np.concatenate(([0], gchg + 1))
+            gends = np.concatenate((gstarts[1:], [n]))
+            # ---- block boundary vectors (no per-group python) ----
+            nblk = -(-(gends - gstarts) // block_size)
+            total = int(nblk.sum())
+            gi_rep = np.repeat(np.arange(len(gstarts)), nblk)
+            first_blk = np.concatenate(([0], np.cumsum(nblk[:-1]))) if len(nblk) else np.array([], dtype=np.int64)
+            bidx = np.arange(total, dtype=np.int64) - np.repeat(first_blk, nblk)
+            bstarts = gstarts[gi_rep] + bidx * block_size
+            bends = np.minimum(bstarts + block_size, gends[gi_rep])
+            # block maxima/minima are order-free within a block
+            bmax_tf = np.maximum.reduceat(tfs_s, bstarts) if total else np.array([], dtype=np.int64)
+            bmax_wand = np.maximum.reduceat(w_s, bstarts) if total else np.array([], dtype=np.float64)
+            # block_min_wand backs the DRIVER-SIDE top-k lower bound tau
+            # (see query._wand_thetas / plan_query) — no Spark job for tau.
+            bmin_wand = np.minimum.reduceat(w_s, bstarts) if total else np.array([], dtype=np.float64)
+            if kind == 1:
+                # impact blocks: re-sort WITHIN each block by doc_id for
+                # delta-gap encoding; positions are not stored
+                blk_of = np.repeat(np.arange(total), bends - bstarts) if total else np.array([], np.int64)
+                o = np.lexsort((ids_s, blk_of))
+                ids_s, tfs_s, dls_s = ids_s[o], tfs_s[o], dls_s[o]
+                pos_b = [b""] * total
+            else:
+                # ---- positions: ONE byte-gather into block order, then slices ----
+                lens_s = plens[order]
+                newoffs = np.concatenate(([0], np.cumsum(lens_s)))
+                nbytes = int(newoffs[-1])
+                idxbytes = np.repeat(pstart[order], lens_s) + (
+                    np.arange(nbytes, dtype=np.int64) - np.repeat(newoffs[:-1], lens_s)
+                )
+                newbuf = pdata[idxbytes].tobytes()
+                pos_b = [newbuf[newoffs[s_] : newoffs[e_]] for s_, e_ in zip(bstarts, bends)]
+            # ---- delta-gap doc ids, reset at BLOCK starts; segmented varints ----
+            ids_u = i64_to_u64_order(ids_s)
+            id_gaps = ids_u.copy()
+            if n > 1:
+                id_gaps[1:] = ids_u[1:] - ids_u[:-1]
+            id_gaps[bstarts] = ids_u[bstarts]
+            # python strings materialized ONLY at group starts
+            start_terms = tcol.take(pa.array(ch_s[gstarts])).to_pylist()
+            return pa.record_batch(
+                [
+                    pa.array([start_terms[g] for g in gi_rep], pa.string()),
+                    pa.array(salt[ch_s[bstarts]].astype(np.int32) if total else [], pa.int32()),
+                    pa.array(bidx.astype(np.int32), pa.int32()),
+                    pa.array(ids_s[bstarts] if total else [], pa.int64()),
+                    pa.array(ids_s[bends - 1] if total else [], pa.int64()),
+                    pa.array((bends - bstarts).astype(np.int32), pa.int32()),
+                    pa.array(varint_encode_segmented(id_gaps, bstarts, bends), pa.binary()),
+                    pa.array(varint_encode_segmented(tfs_s.astype(np.uint64), bstarts, bends), pa.binary()),
+                    pa.array(varint_encode_segmented(dls_s.astype(np.uint64), bstarts, bends), pa.binary()),
+                    pa.array(pos_b, pa.binary()),
+                    pa.array(bmax_tf.astype(np.int32), pa.int32()),
+                    pa.array(bmax_wand.astype(np.float64), pa.float64()),
+                    pa.array(bmin_wand.astype(np.float64), pa.float64()),
+                    pa.array(np.full(total, kind, dtype=np.int32), pa.int32()),
+                    pa.array(bucket[ch_s[bstarts]].astype(np.int32) if total else [], pa.int32()),
+                ],
+                names=names,
+            )
 
-        # ---- block boundary vectors (no per-group python) ----
-        glens = gends - gstarts
-        nblk = -(-glens // block_size)
-        total = int(nblk.sum())
-        gi_rep = np.repeat(np.arange(len(gstarts)), nblk)
-        first_blk = np.concatenate(([0], np.cumsum(nblk[:-1]))) if len(nblk) else np.array([], dtype=np.int64)
-        bidx = np.arange(total, dtype=np.int64) - np.repeat(first_blk, nblk)
-        bstarts = gstarts[gi_rep] + bidx * block_size
-        bends = np.minimum(bstarts + block_size, gends[gi_rep])
+        # ---- kind=0: merge-sort postings by doc_id within each (term,salt) group ----
+        yield emit(np.lexsort((ids, gid_p)), 0)
 
-        # ---- delta-gap doc ids, reset at BLOCK starts; segmented varints ----
-        ids_u = i64_to_u64_order(ids_s)
-        id_gaps = ids_u.copy()
-        if n_post > 1:
-            id_gaps[1:] = ids_u[1:] - ids_u[:-1]
-        id_gaps[bstarts] = ids_u[bstarts]
-        ids_b = varint_encode_segmented(id_gaps, bstarts, bends)
-        tfs_b = varint_encode_segmented(tfs_s.astype(np.uint64), bstarts, bends)
-        dls_b = varint_encode_segmented(dls_s.astype(np.uint64), bstarts, bends)
-
-        # ---- positions: ONE byte-gather into block order, then slices ----
-        lens_s = plens[order]
-        newoffs = np.concatenate(([0], np.cumsum(lens_s)))
-        nbytes = int(newoffs[-1])
-        idxbytes = np.repeat(pstart[order], lens_s) + (
-            np.arange(nbytes, dtype=np.int64) - np.repeat(newoffs[:-1], lens_s)
-        )
-        newbuf = pdata[idxbytes].tobytes()
-        pos_b = [newbuf[newoffs[s_] : newoffs[e_]] for s_, e_ in zip(bstarts, bends)]
-
-        denom = tfs_s + K1 * (1.0 - B + B * dls_s / max(avgdl, 1e-9))
-        wand = tfs_s * (K1 + 1.0) / denom
-        bmax_tf = np.maximum.reduceat(tfs_s, bstarts) if total else np.array([], dtype=np.int64)
-        bmax_wand = np.maximum.reduceat(wand, bstarts) if total else np.array([], dtype=np.float64)
-        # block_min_wand backs the DRIVER-SIDE top-k lower bound tau
-        # (see query._pruned_block_filter) — no Spark job needed for tau.
-        bmin_wand = np.minimum.reduceat(wand, bstarts) if total else np.array([], dtype=np.float64)
-
-        # python strings materialized ONLY at group starts
-        start_terms = tcol.take(pa.array(ch_s[gstarts])).to_pylist()
-        terms_per_block = [start_terms[g] for g in gi_rep]
-
-        names = [
-            "term", "salt", "block_id", "min_doc_id", "max_doc_id", "n_docs",
-            "doc_ids", "tfs", "doc_lens", "positions", "block_max_tf", "block_max_wand",
-            "block_min_wand", "kind", "bucket",
-        ]
-        yield pa.record_batch(
-            [
-                pa.array(terms_per_block, pa.string()),
-                pa.array(salt[ch_s[bstarts]].astype(np.int32) if total else [], pa.int32()),
-                pa.array(bidx.astype(np.int32), pa.int32()),
-                pa.array(ids_s[bstarts] if total else [], pa.int64()),
-                pa.array(ids_s[bends - 1] if total else [], pa.int64()),
-                pa.array((bends - bstarts).astype(np.int32), pa.int32()),
-                pa.array(ids_b, pa.binary()),
-                pa.array(tfs_b, pa.binary()),
-                pa.array(dls_b, pa.binary()),
-                pa.array(pos_b, pa.binary()),
-                pa.array(bmax_tf.astype(np.int32), pa.int32()),
-                pa.array(bmax_wand.astype(np.float64), pa.float64()),
-                pa.array(bmin_wand.astype(np.float64), pa.float64()),
-                pa.array(np.zeros(total, dtype=np.int32), pa.int32()),
-                pa.array(bucket[ch_s[bstarts]].astype(np.int32) if total else [], pa.int32()),
-            ],
-            names=names,
-        )
-
-        # ---- impact emission (kind=1) for flagged groups ----
+        # ---- kind=1: impact order (wand DESC) for flagged groups ----
         if "want_impact" not in tbl.column_names:
             return
         want = tbl["want_impact"].to_numpy(zero_copy_only=False).astype(bool)
-        imask = want[chunk_of]
-        if not imask.any():
-            return
-        iids, itfs, idls = ids[imask], tfs[imask], dls[imask]
-        ig, ich = gid_p[imask], chunk_of[imask]
-        n_ip = len(iids)
-        iw = itfs * (K1 + 1.0) / (itfs + K1 * (1.0 - B + B * idls / max(avgdl, 1e-9)))
-        iorder = np.lexsort((iids, -iw, ig))
-        ids_s2, tfs_s2, dls_s2, w_s2 = iids[iorder], itfs[iorder], idls[iorder], iw[iorder]
-        g_s2, ch_s2 = ig[iorder], ich[iorder]
-        gchg2 = np.flatnonzero(g_s2[1:] != g_s2[:-1]) if n_ip > 1 else np.array([], dtype=np.int64)
-        gst2 = np.concatenate(([0], gchg2 + 1))
-        gen2 = np.concatenate((gst2[1:], [n_ip]))
-        nblk2 = -(-(gen2 - gst2) // block_size)
-        tot2 = int(nblk2.sum())
-        gi2 = np.repeat(np.arange(len(gst2)), nblk2)
-        first2 = np.concatenate(([0], np.cumsum(nblk2[:-1]))) if len(nblk2) else np.array([], dtype=np.int64)
-        bidx2 = np.arange(tot2, dtype=np.int64) - np.repeat(first2, nblk2)
-        bst2 = gst2[gi2] + bidx2 * block_size
-        ben2 = np.minimum(bst2 + block_size, gen2[gi2])
-        # block maxima BEFORE the intra-block reorder (max is order-free)
-        bmax2 = np.maximum.reduceat(w_s2, bst2) if tot2 else np.array([], np.float64)
-        bmin2 = np.minimum.reduceat(w_s2, bst2) if tot2 else np.array([], np.float64)
-        bmaxtf2 = np.maximum.reduceat(tfs_s2, bst2) if tot2 else np.array([], np.int64)
-        # re-sort WITHIN each block by doc_id for delta-gap encoding
-        blk_of2 = np.repeat(np.arange(tot2), ben2 - bst2) if tot2 else np.array([], np.int64)
-        o2 = np.lexsort((ids_s2, blk_of2))
-        ids_b2, tfs_b2, dls_b2 = ids_s2[o2], tfs_s2[o2], dls_s2[o2]
-        ids_u2 = i64_to_u64_order(ids_b2)
-        gaps2 = ids_u2.copy()
-        if n_ip > 1:
-            gaps2[1:] = ids_u2[1:] - ids_u2[:-1]
-        gaps2[bst2] = ids_u2[bst2]
-        enc_ids = varint_encode_segmented(gaps2, bst2, ben2)
-        enc_tfs = varint_encode_segmented(tfs_b2.astype(np.uint64), bst2, ben2)
-        enc_dls = varint_encode_segmented(dls_b2.astype(np.uint64), bst2, ben2)
-        st_terms2 = tcol.take(pa.array(ch_s2[gst2])).to_pylist()
-        yield pa.record_batch(
-            [
-                pa.array([st_terms2[g] for g in gi2], pa.string()),
-                pa.array(salt[ch_s2[bst2]].astype(np.int32) if tot2 else [], pa.int32()),
-                pa.array(bidx2.astype(np.int32), pa.int32()),
-                pa.array(ids_b2[bst2] if tot2 else [], pa.int64()),
-                pa.array(ids_b2[ben2 - 1] if tot2 else [], pa.int64()),
-                pa.array((ben2 - bst2).astype(np.int32), pa.int32()),
-                pa.array(enc_ids, pa.binary()),
-                pa.array(enc_tfs, pa.binary()),
-                pa.array(enc_dls, pa.binary()),
-                pa.array([b""] * tot2, pa.binary()),
-                pa.array(bmaxtf2.astype(np.int32), pa.int32()),
-                pa.array(bmax2.astype(np.float64), pa.float64()),
-                pa.array(bmin2.astype(np.float64), pa.float64()),
-                pa.array(np.ones(tot2, dtype=np.int32), pa.int32()),
-                pa.array(bucket[ch_s2[bst2]].astype(np.int32) if tot2 else [], pa.int32()),
-            ],
-            names=names,
-        )
+        sel = np.flatnonzero(want[chunk_of])
+        if len(sel):
+            yield emit(sel[np.lexsort((ids[sel], -wand[sel], gid_p[sel]))], 1)
 
     return mapper
 
 
-def _impact_ladders(postings: DataFrame) -> DataFrame:
-    """term -> impact_ladder: array of per-salt arrays, each
-    [n_impact_blocks, max@0, min@0, max@1, min@1, max@2, min@2,
-    max@4, min@4, ...] — block_max_wand/block_min_wand sampled at
-    power-of-two block_ids.
+def _block_summary(postings: DataFrame) -> DataFrame:
+    """Per-term block summary (term_block_stats) of a postings table:
+    n_blocks, n_postings, top_wands (the K_TOP largest block_max_wand),
+    impact_ladder and ub_wand = top_wands[0].
 
-    Impact lists (kind=1) are wand-DESC, so BOTH stats are
-    non-increasing by block_id: the maxima let the query planner bound
-    blocks-kept-under-theta within 2x for ANY theta (first sampled max
-    < theta at block_id 2^(j-1) proves every later block is cut), and
-    the minima prove ~block_size DISTINCT docs per qualifying block
-    (min@b >= v means EVERY posting in blocks 0..b scores >= v), which
-    extends tau formation to arbitrary depth k — negation's df-aware
-    k_eff on a high-df exclusion needs thousands, far past the stored
-    top_wands. Terms without impact copies get NULL (the planner falls
-    back to the sound top_wands estimate)."""
-    pi = postings.filter(F.col("kind") == 1)
-    po2 = F.col("block_id").bitwiseAND(F.col("block_id") - 1) == 0  # 0,1,2,4,...
+    ONE conditional-aggregation pass over BOTH kinds of block meta
+    ((term, salt) keys are shared — impact copies reuse their group's
+    salt): kind=0 rows feed the df-derived stats (counting both kinds
+    would double them), kind=1 rows feed the impact ladder. The scan
+    reads only small meta columns (parquet column pruning never touches
+    the compressed blobs) and the top-k agg is two-phase over the salt,
+    so no task ever collects an unsalted stopword's full block list.
+
+    impact_ladder: per covered salt [n_impact_blocks, max@0, min@0,
+    max@1, min@1, max@2, min@2, max@4, min@4, ...] — block_max_wand /
+    block_min_wand sampled at power-of-two block_ids. Impact lists are
+    wand-DESC, so BOTH stats are non-increasing by block_id: the maxima
+    let the query planner bound blocks-kept-under-theta within 2x for
+    ANY theta (first sampled max < theta at block_id 2^(j-1) proves
+    every later block is cut), and the minima prove ~block_size DISTINCT docs per
+    qualifying block (min@b >= v means EVERY posting in blocks 0..b
+    scores >= v), which extends tau formation to arbitrary depth k —
+    negation's df-aware k_eff on a high-df exclusion needs thousands,
+    far past the stored top_wands. Terms without impact copies get NULL
+    (the planner falls back to the sound top_wands estimate)."""
+    k0 = F.col("kind") == 0
+    k1po2 = (F.col("kind") == 1) & (F.col("block_id").bitwiseAND(F.col("block_id") - 1) == 0)
     pts = F.array_sort(
         F.collect_list(
             F.when(
-                po2,
+                k1po2,
                 F.struct(
                     F.col("block_id").alias("b"),
                     F.col("block_max_wand").alias("mx"),
@@ -625,13 +582,39 @@ def _impact_ladders(postings: DataFrame) -> DataFrame:
             )
         )
     )  # struct sort = by block_id asc
-    per_salt = pi.groupBy("term", "salt").agg(
-        F.concat(
-            F.array(F.count("*").cast("double")),
-            F.flatten(F.transform(pts, lambda s: F.array(s["mx"], s["mn"]))),
-        ).alias("salt_ladder")
+    partial = postings.groupBy("term", "salt").agg(
+        F.count(F.when(k0, 1)).cast("long").alias("nb"),
+        F.sum(F.when(k0, F.col("n_docs"))).cast("long").alias("np"),
+        F.slice(
+            F.sort_array(F.collect_list(F.when(k0, F.col("block_max_wand"))), asc=False),
+            1, K_TOP,
+        ).alias("tw"),
+        F.count(F.when(F.col("kind") == 1, 1)).cast("double").alias("nib"),
+        pts.alias("pts"),
+    ).withColumn(
+        "salt_ladder",
+        F.when(
+            F.col("nib") > 0,
+            F.concat(
+                F.array(F.col("nib")),
+                F.flatten(F.transform(F.col("pts"), lambda s: F.array(s["mx"], s["mn"]))),
+            ),
+        ),
     )
-    return per_salt.groupBy("term").agg(F.collect_list("salt_ladder").alias("impact_ladder"))
+    return (
+        partial.groupBy("term")
+        .agg(
+            F.sum("nb").alias("n_blocks"),
+            F.sum("np").alias("n_postings"),
+            F.slice(F.sort_array(F.flatten(F.collect_list("tw")), asc=False), 1, K_TOP).alias("top_wands"),
+            F.collect_list("salt_ladder").alias("impact_ladder"),  # skips nulls
+        )
+        .withColumn("ub_wand", F.col("top_wands")[0])
+        .withColumn(
+            "impact_ladder",
+            F.when(F.size("impact_ladder") > 0, F.col("impact_ladder")),
+        )
+    )
 
 
 def _cpu_timed(gen_fn, acc):
@@ -894,13 +877,21 @@ def _extracted_docs(
     )
 
 
-def _term_stats_local(spark: SparkSession, wh: Warehouse, max_bytes: int = 32 << 20) -> int | None:
+# Driver-side gates of the term_stats and blocks stages: below these
+# sizes the aggregate / hot-set read runs in pyarrow on the driver instead
+# of as Spark jobs (r8: ~0.5s and ~0.2s of scheduler floor at bench
+# scale). test_build_gates_forced_both_ways forces both sides.
+_LOCAL_STATS_MAX_BYTES = 32 << 20
+_LOCAL_HOT_MAX_TERMS = 65_536
+
+
+def _term_stats_local(spark: SparkSession, wh: Warehouse) -> int | None:
     """Driver-side term_stats aggregation for small local flat tables:
     reads ONLY (term, n_docs, cf) via pyarrow column pruning, does the
     exact integer groupby-sum in pandas, writes the table through the
     fsio seam. Returns the term count, or None when not eligible
     (Iceberg/scheme'd warehouse, or the pruned stats columns exceed
-    max_bytes compressed — the cluster-scale case)."""
+    _LOCAL_STATS_MAX_BYTES compressed — the cluster-scale case)."""
     if catalog.iceberg_catalog(spark) is not None or fsio.has_scheme(wh.root):
         return None
     try:
@@ -920,7 +911,7 @@ def _term_stats_local(spark: SparkSession, wh: Warehouse, max_bytes: int = 32 <<
                     col = g.column(c)
                     if col.path_in_schema in want:
                         col_bytes += col.total_compressed_size
-            if col_bytes > max_bytes:
+            if col_bytes > _LOCAL_STATS_MAX_BYTES:
                 return None
         parts = [pq.read_table(p, columns=["term", "n_docs", "cf"]) for p in files]
         pdf = pa.concat_tables(parts).to_pandas()
@@ -942,27 +933,22 @@ def _term_stats_local(spark: SparkSession, wh: Warehouse, max_bytes: int = 32 <<
         return None  # any surprise falls back to the Spark aggregation
 
 
-def _hot_terms_local(
-    spark: SparkSession, wh: Warehouse, hot_df: int,
-    max_bytes: int = 32 << 20, max_terms: int = 65_536,
-) -> list[str] | None:
-    """Driver-side read of the hot-term set (term_stats.df >= hot_df)
-    when the table is local and small: the blocks stage then skips three
-    small Spark jobs (term_stats scan, broadcast build, impact_terms
-    write — ~0.2s of pure scheduler floor at bench scale) by folding the
-    hot set into the plan as an InSet literal and writing impact_terms
-    driver-side. None when not eligible (Iceberg/scheme'd warehouse,
-    segmented table, or a vocabulary too big for a literal plan — the
-    cluster-scale case, which keeps the broadcast-join path)."""
-    if catalog.iceberg_catalog(spark) is not None or fsio.has_scheme(wh.root):
+def _hot_terms_local(spark: SparkSession, ts_path: str, hot_df: int) -> list[str] | None:
+    """Driver-side read of the hot-term set (df >= hot_df) of the
+    term_stats parquet at `ts_path` when it is local and small: the
+    blocks stage then skips three small Spark jobs (term_stats scan,
+    broadcast build, impact_terms write — ~0.2s of pure scheduler floor
+    at bench scale) by folding the hot set into the plan as an InSet
+    literal. None when not eligible (Iceberg catalog, scheme'd or missing
+    path, or a vocabulary too big for a literal plan — the cluster-scale
+    case, which keeps the broadcast-join path)."""
+    if catalog.iceberg_catalog(spark) is not None or fsio.has_scheme(ts_path):
         return None
-    if catalog._n_appends(wh.root):
-        return None  # segment-resolved table: keep the Spark read
     try:
-        files = fsio.file_sizes(os.path.join(wh.path("term_stats"), "*.parquet"))
+        files = fsio.file_sizes(os.path.join(ts_path, "*.parquet"))
     except Exception:
         return None
-    if not files or sum(sz for _, sz in files) > max_bytes:
+    if not files or sum(sz for _, sz in files) > _LOCAL_STATS_MAX_BYTES:
         return None
     try:
         import pyarrow.compute as pc
@@ -972,7 +958,7 @@ def _hot_terms_local(
         for f, _ in files:
             t = pq.read_table(f, columns=["term", "df"])
             hot.extend(t.filter(pc.greater_equal(t["df"], hot_df))["term"].to_pylist())
-            if len(hot) > max_terms:
+            if len(hot) > _LOCAL_HOT_MAX_TERMS:
                 return None
         return sorted(hot)
     except Exception:
@@ -990,6 +976,94 @@ def _write_impact_terms_local(wh: Warehouse, terms: list[str]) -> None:
         os.path.join(path, "part-0.parquet"),
         pa.table({"term": pa.array(sorted(terms), pa.string())}),
     )
+
+
+def _salt_chunks(
+    spark: SparkSession, chunks: DataFrame, ts_path: str, read_ts, hot_df: int, n_salts: int,
+    *, salt_base: int = 0, covered: DataFrame | None = None,
+):
+    """Chunk-level salting for the (term, salt) merge, shared by the
+    build's blocks stage and append_index. A hot term's postings arrive
+    pre-split into <=4*block_size-doc chunks (flat kernel), so spreading
+    its CHUNKS over n_salts reduce tasks bounds any single task's share
+    of a stopword posting list. salt = salt_base + (hot ?
+    pmod(xxhash64(doc_ids), n_salts) : 0) — the chunk's encoded doc_ids
+    blob is unique per chunk, so its hash spreads a hot term's chunks
+    regardless of input partitioning; appends pass a fresh salt_base so
+    (term, salt, block_id) stays globally unique.
+
+    The hot set (df >= hot_df in the term_stats at `ts_path`) comes
+    driver-side as an InSet literal when that table is local and small
+    (_hot_terms_local), else from `read_ts()` via a broadcast join.
+    want_impact flags the groups that also emit impact-ordered blocks:
+    the hot set itself, or — when `covered` (a term column) is given —
+    exactly those terms (append follows the build-time impact_terms).
+
+    Returns (salted, hot): hot is the driver-side hot list, or the
+    (term, is_hot) DataFrame of the broadcast-join path."""
+    hot = _hot_terms_local(spark, ts_path, hot_df)
+    if hot is not None:
+        is_hot = F.col("term").isin(hot) if hot else F.lit(False)
+    else:
+        hot = read_ts().filter(F.col("df") >= hot_df).select("term", F.lit(True).alias("is_hot"))
+        chunks = chunks.join(F.broadcast(hot), "term", "left")
+        is_hot = F.coalesce(F.col("is_hot"), F.lit(False))
+    want = is_hot
+    if covered is not None:
+        chunks = chunks.join(F.broadcast(covered.select("term", F.lit(True).alias("_cov"))), "term", "left")
+        want = F.coalesce(F.col("_cov"), F.lit(False))
+    salt = F.when(is_hot, F.pmod(F.xxhash64("doc_ids"), F.lit(n_salts))).otherwise(F.lit(0))
+    salted = (
+        chunks.withColumn("salt", (F.lit(salt_base) + salt).cast("int"))
+        .withColumn("want_impact", want)
+        .drop("is_hot", "_cov")
+    )
+    return salted, hot
+
+
+def _write_blocks(
+    spark: SparkSession, salted: DataFrame, root: str, *, nparts: int, n_buckets: int,
+    block_size: int, avgdl: float, staged: bool = False,
+) -> int:
+    """The global merge and the postings write, shared by the build's
+    blocks stage and append_index; returns the number of blocks written.
+
+    repartition(nparts, term, salt) co-locates each (term, salt) group;
+    the kernel (_make_block_mapper) sorts its partition columnar-side,
+    so there is no JVM sortWithinPartitions before it. The partition
+    count is PINNED: a bare repartition(cols) is AQE-coalescible down to
+    ~advisory-size (64MB) partitions, which would cap the codec
+    parallelism at a handful of tasks regardless of cores. A second
+    repartition(n_buckets, bucket) then writes ONE file per bucket dir:
+    it moves the compressed posting volume again, but buys the lowest
+    per-query file-open cost (r7 A/B against a single bucket-aligned
+    shuffle at 600k docs, 16 cores: build 19.8s vs 24.5s, pruned 'the'
+    328ms vs 411ms).
+
+    Files are sorted by (term, salt, block_id) with 8MB row groups: the
+    query side's isin(term) and block_max_wand predicates then SKIP row
+    groups (a single default 128MB group per file made every per-term
+    scan read the whole bucket's blobs — measured 0.4s for a 4-block
+    query). kind leads the partitioning, so each query path reads only
+    its own layout's directories. The table is `postings` under `root`:
+    the build writes it through catalog.write_table; an append
+    (staged=True, root = its segment dir) stages plain parquet and
+    commits separately."""
+    blocks = salted.repartition(nparts, F.col("term"), F.col("salt")).mapInArrow(
+        _make_block_mapper(block_size, avgdl), BLOCK_SCHEMA
+    )
+    blocks, obs = _observed(blocks, "blocks")
+    blocks = blocks.repartition(n_buckets, "bucket")
+    layout = dict(partition_by=["kind", "bucket"], sort_by=["term", "salt", "block_id"], row_group_bytes=8 << 20)
+    if not staged:
+        catalog.write_table(spark, blocks, root, "postings", **layout)
+    else:
+        (
+            blocks.sortWithinPartitions(*layout["sort_by"])
+            .write.mode("overwrite").option("parquet.block.size", layout["row_group_bytes"])
+            .partitionBy(*layout["partition_by"]).parquet(os.path.join(root, "postings"))
+        )
+    return int(obs.get["n_rows"])
 
 
 def _merge_parts_default(spark: SparkSession, wh: Warehouse, flat_dir: str | None = None) -> int:
@@ -1045,44 +1119,59 @@ def auto_buckets(n_docs: int, docs_per_bucket: int = DOCS_PER_BUCKET) -> int:
     return max(8, -(-int(n_docs) // int(docs_per_bucket)))
 
 
-def _resolved_buckets_from_manifest(
-    wh: Warehouse, input_id: str, block_size: int, hot_df: int, n_salts: int,
-    from_html: bool, bucket_layout: str,
-) -> int | None:
+def _fingerprint(
+    input_id: str, n_buckets: int, block_size: int, hot_df: int, n_salts: int, from_html: bool,
+    input_files: tuple[int, int] | None = None,
+) -> str:
+    """Stage fingerprint: a completed stage is reused only under the same
+    string. It folds in input_id and every field that changes produced
+    bytes — the config (query-side bucket math would silently diverge
+    from a layout built under another one), from_html (extract source),
+    K_TOP (the block_stats table) and INDEX_FORMAT. For a local parquet
+    path input, input_files = (footer row count, total file bytes), so
+    files added to or rewritten in that directory rebuild instead of
+    resuming stale under the same input_id."""
+    fp = (
+        f"{input_id}|v{INDEX_FORMAT}|cfg:b{n_buckets}.bs{block_size}.h{hot_df}.s{n_salts}"
+        f".fh{int(bool(from_html))}.kt{K_TOP}"
+    )
+    if input_files is not None:
+        fp += f"|in:r{input_files[0]}.b{input_files[1]}"
+    return fp
+
+
+def _resolved_buckets_from_manifest(wh: Warehouse, fingerprint_at) -> int | None:
     """n_buckets a previous completed run resolved for the SAME
     (input_id, config), else None. Sound because the extract manifest's
     fingerprint folds in input_id and every config field: a match means
-    stage resume would treat the inputs as identical anyway."""
-    cfg = wh.read_manifest("config") or {}
-    nb = cfg.get("n_buckets")
+    stage resume would treat the inputs as identical anyway.
+    fingerprint_at(n_buckets) -> the fingerprint under that count."""
+    nb = (wh.read_manifest("config") or {}).get("n_buckets")
     if not nb:
         return None
     m = wh.read_manifest("extract") or {}
-    want_fp = (
-        f"{input_id}|v{INDEX_FORMAT}|cfg:b{int(nb)}.bs{block_size}.h{hot_df}.s{n_salts}"
-        f".fh{int(bool(from_html))}.kt{K_TOP}.bl{bucket_layout[0]}"
-    )
-    if m.get("ok") and m.get("fingerprint") == want_fp:
+    if m.get("ok") and m.get("fingerprint") == fingerprint_at(int(nb)):
         return int(nb)
     return None
 
 
-def _input_doc_count(spark: SparkSession, pages: DataFrame | str) -> int:
-    """Row count of the build input, as cheaply as the input allows:
-    local parquet dirs via pyarrow footer metadata (no Spark job, no
-    data read); anything else via a zero-column Spark count."""
-    if isinstance(pages, str) and not fsio.has_scheme(pages):
-        try:
-            import pyarrow.parquet as pq
+def _input_files(pages: DataFrame | str) -> tuple[int, int] | None:
+    """(row count, total bytes) of a local parquet path input from its
+    pyarrow footers (no Spark job, no data read); None for DataFrames,
+    scheme'd paths or an unreadable listing."""
+    if not isinstance(pages, str) or fsio.has_scheme(pages):
+        return None
+    try:
+        import pyarrow.parquet as pq
 
-            pat = pages if pages.endswith(".parquet") else os.path.join(pages, "*.parquet")
-            files = [p for p, _ in fsio.file_sizes(pat)]
-            if files:
-                return sum(pq.ParquetFile(p).metadata.num_rows for p in files)
-        except Exception:
-            pass
-    df = spark.read.parquet(pages) if isinstance(pages, str) else pages
-    return df.count()
+        pat = pages if pages.endswith(".parquet") else os.path.join(pages, "*.parquet")
+        sizes = fsio.file_sizes(pat)
+        if sizes:
+            rows = sum(pq.ParquetFile(p).metadata.num_rows for p, _ in sizes)
+            return rows, sum(sz for _, sz in sizes)
+    except Exception:
+        pass
+    return None
 
 
 def build_index(
@@ -1099,27 +1188,11 @@ def build_index(
     resume: bool = True,
     from_html: bool = True,
     merge_parts: int | None = None,
-    impact_copies: bool = True,
-    bucket_layout: str = "compact",
 ) -> Warehouse:
     """Build the full index under `warehouse`. Idempotent per (stage,
-    input_id): completed stages are skipped on rerun (resume=True).
-
-    bucket_layout picks the blocks-stage shuffle strategy, A/B-measured
-    (600k docs, interleaved best-of-3, r7):
-    - "compact" (default): plain (term, salt) merge + a second
-      repartition(bucket) before the write -> ONE file per bucket dir.
-      The second shuffle moves the final compressed posting volume
-      again, but on tmpfs/local disk that pass is cheap and it buys the
-      lowest per-query file-open cost and the fastest downstream footer
-      walks (measured: build 19.8s vs 24.5s @16 cores, scaling 0.607 vs
-      0.548, pruned 'the' 328ms vs 411ms against "aligned").
-    - "aligned": the merge key is bucket * P + hash(term, salt) % P —
-      still a pure function of (term, salt), so the merge kernel is
-      unchanged — and the write needs NO second shuffle, at <=P files
-      per bucket dir. The at-CLUSTER-scale choice: there the saved pass
-      is a full NETWORK shuffle of the posting volume, which dominates
-      the extra file opens; locally the tradeoff measurably inverts.
+    input_id): completed stages are skipped on rerun (resume=True). A
+    local parquet path input also folds its files' row count and bytes
+    into the resume fingerprint, so a changed directory rebuilds.
 
     n_buckets="auto" (default) sizes the term-bucket count to the
     corpus — auto_buckets(n_docs) = max(8, ceil(n_docs/37_500)) — so
@@ -1134,12 +1207,6 @@ def build_index(
     smooth hot-group skew and bound per-task columnar buffers). Tune up
     further on memory-constrained executors.
 
-    impact_copies=False skips the impact-ordered (kind=1) copies of hot
-    terms' postings: ~30% less postings storage and a faster build, at
-    the cost of disjunctive multi-stopword queries losing their pruned
-    path (the query planner consults impact_terms, so it degrades to the
-    still-exact doc_id-ordered plan automatically).
-
     pages must carry (url, warc_ts, html, text, lang) and optionally
     doc_id; without doc_id a stable xxhash64(url) id is assigned
     (deterministic under resume and cluster size — SURVEY.md §2.8).
@@ -1151,6 +1218,11 @@ def build_index(
     """
     wh = warehouse if isinstance(warehouse, Warehouse) else Warehouse(warehouse)
     fsio.mkdirs(wh.root)
+    files = _input_files(pages)
+
+    def fingerprint_at(nb: int) -> str:
+        return _fingerprint(input_id, nb, block_size, hot_df, n_salts, from_html, files)
+
     if n_buckets in (None, "auto"):
         # corpus-proportional layout (see auto_buckets): resolved to a
         # concrete int BEFORE the fingerprint so resume stays sound —
@@ -1162,29 +1234,18 @@ def build_index(
         # re-executed the whole upstream plan on every no-op rerun.
         # (input_id is the caller's contract that the input is the same
         # data — exactly what stage resume already relies on.)
-        n_buckets = _resolved_buckets_from_manifest(
-            wh, input_id, block_size, hot_df, n_salts, from_html, bucket_layout
-        ) if resume else None
+        n_buckets = _resolved_buckets_from_manifest(wh, fingerprint_at) if resume else None
         if n_buckets is None:
-            n_buckets = auto_buckets(_input_doc_count(spark, pages))
+            n_rows = files[0] if files else (
+                spark.read.parquet(pages) if isinstance(pages, str) else pages
+            ).count()
+            n_buckets = auto_buckets(n_rows)
     n_buckets = int(n_buckets)
     cfg = {
         "n_buckets": n_buckets, "block_size": block_size, "hot_df": hot_df,
-        "n_salts": n_salts, "k1": K1, "b": B, "impact_copies": impact_copies,
-        "bucket_layout": bucket_layout,
+        "n_salts": n_salts, "k1": K1, "b": B,
     }
-    # Resume correctness: stage manifests key on (input_id, config) — a
-    # rerun with a different n_buckets/block_size/... must NOT skip stages
-    # built under the old config (query-side bucket math would silently
-    # diverge from the stored layout). The fingerprint folds the config in,
-    # forcing a rebuild on any mismatch.
-    # from_html changes the produced bytes (extract source) and K_TOP the
-    # block_stats table — both fold into the fingerprint so a rerun with
-    # either changed rebuilds instead of serving stale stages.
-    fingerprint = (
-        f"{input_id}|v{INDEX_FORMAT}|cfg:b{n_buckets}.bs{block_size}.h{hot_df}.s{n_salts}"
-        f".fh{int(bool(from_html))}.kt{K_TOP}.bl{bucket_layout[0]}"
-    )
+    fingerprint = fingerprint_at(n_buckets)
     prev_cfg = wh.read_manifest("config") or {}
     for key in ("wand_avgdl", "n_appends"):  # survive resume no-ops; reset
         if key in prev_cfg:  # happens in the blocks stage on real reruns
@@ -1331,6 +1392,7 @@ def build_index(
         # (~0.5s at bench scale); larger/remote/Iceberg inputs keep the
         # distributed aggregation.
         n_terms = _term_stats_local(spark, wh)
+        side = "local" if n_terms is not None else "spark"
         if n_terms is None:
             ts = flat.groupBy("term").agg(
                 F.sum("n_docs").cast("long").alias("df"),
@@ -1339,7 +1401,7 @@ def build_index(
             ts, obs = _observed(ts, "term_stats")
             catalog.write_table(spark, ts, wh.root, "term_stats")
             n_terms = obs.get["n_rows"]
-        finish("term_stats", t0, [(-1, n_terms, None)])
+        finish("term_stats", t0, [(-1, n_terms, None)], side=side)
 
     # ---- stage: compressed blocks ------------------------------------------
     if stage_runs("blocks"):
@@ -1354,107 +1416,21 @@ def build_index(
         c["n_appends"] = 0  # a (re)build resets the append lineage
         wh.write_manifest("config", c)
         fsio.remove(wh.path("_segments"), recursive=True)  # orphaned epochs
-        # chunk-level salting: a hot term's postings arrive pre-split
-        # into <=4*block_size-doc chunks (flat kernel), so spreading its
-        # CHUNKS across n_salts reduce tasks bounds any single task's
-        # share of a stopword posting list — same guarantee as round 1's
-        # per-doc hash salt, at chunk granularity. The hot set comes
-        # driver-side (InSet literal + driver-written impact_terms —
-        # three fewer scheduler round trips) when term_stats is local
-        # and small, else via the broadcast join (cluster-scale path).
-        hot_list = _hot_terms_local(spark, wh, hot_df)
-        if hot_list is not None:
-            is_hot_col = F.col("term").isin(hot_list) if hot_list else F.lit(False)
-            salted = (
-                flat.withColumn(
-                    "salt",
-                    # per-chunk entropy: the chunk's encoded doc_ids blob
-                    # is unique per chunk, so its hash spreads a hot
-                    # term's chunks across salts regardless of input
-                    # partitioning
-                    F.when(
-                        is_hot_col, F.pmod(F.xxhash64("doc_ids"), F.lit(n_salts)).cast("int")
-                    ).otherwise(F.lit(0)),
-                )
-                # hot groups also emit the impact-ordered copy (kind=1);
-                # impact_terms records this coverage for queries
-                .withColumn("want_impact", is_hot_col & F.lit(impact_copies))
-            )
-            _write_impact_terms_local(wh, hot_list if impact_copies else [])
-        else:
-            hot_terms = (
-                catalog.read_table(spark, wh.root, "term_stats")
-                .filter(F.col("df") >= hot_df)
-                .select("term", F.lit(True).alias("is_hot"))
-            )
-            salted = (
-                flat.join(F.broadcast(hot_terms), "term", "left")
-                .withColumn(
-                    "salt",
-                    F.when(
-                        F.col("is_hot"), F.pmod(F.xxhash64("doc_ids"), F.lit(n_salts)).cast("int")
-                    ).otherwise(F.lit(0)),
-                )
-                .withColumn(
-                    "want_impact",
-                    F.coalesce(F.col("is_hot"), F.lit(False)) & F.lit(impact_copies),
-                )
-                .drop("is_hot")
-            )
-            covered_terms = hot_terms if impact_copies else hot_terms.limit(0)
-            catalog.write_table(
-                spark, covered_terms.select("term").coalesce(1), wh.root, "impact_terms"
-            )
-        # co-locate each (term, salt) group; the kernel itself sorts the
-        # partition columnar-side (no JVM sortWithinPartitions — see
-        # _make_block_mapper). The partition count is PINNED: a bare
-        # repartition(cols) is AQE-coalescible down to ~advisory-size
-        # (64MB) partitions, which would cap the codec parallelism at a
-        # handful of tasks regardless of cores.
-        #
-        # ONE shuffle, bucket-ALIGNED (r7): the merge key is
-        # bucket * P + xxhash64(term, salt) % P — still a pure function
-        # of (term, salt), so every group lands whole in one partition
-        # and the merge kernel is unchanged — but each partition now
-        # holds groups of ~one bucket, so the write below needs NO
-        # second repartition. The old layout shuffled the FINAL
-        # compressed blocks (the full posting volume) a second time
-        # just to get one-file-per-bucket; this trades that whole pass
-        # for <=P files per bucket dir (row-group skipping makes the
-        # per-term scan cost identical). P bounds both files-per-bucket
-        # and merge parallelism (n_buckets * P tasks) — n_buckets grows
-        # with the corpus (auto_buckets), so parallelism scales.
-        nparts = merge_parts or _merge_parts_default(spark, wh)
-        if bucket_layout == "aligned":
-            # >= n_salts so a salted stopword's chunk groups still spread
-            # across distinct tasks within their bucket's key range
-            per_bucket = max(n_salts, min(16, (nparts + n_buckets - 1) // n_buckets))
-            mkey = F.col("bucket").cast("long") * per_bucket + F.pmod(
-                F.xxhash64("term", "salt"), F.lit(per_bucket)
-            )
-            # 2x partitions over distinct keys: hash collisions would
-            # otherwise idle ~1/e of the tasks and double-load others
-            pre = salted.repartition(2 * n_buckets * per_bucket, mkey)
-        else:  # "compact": plain (term, salt) merge + a second shuffle
-            # below for one-file-per-bucket — pays a full extra pass of
-            # the compressed posting volume through the exchange, buys
-            # minimum files per bucket dir (lowest per-query open cost)
-            pre = salted.repartition(nparts, F.col("term"), F.col("salt"))
-        blocks = pre.mapInArrow(_make_block_mapper(block_size, avgdl), BLOCK_SCHEMA)
-        blocks, obs = _observed(blocks, "blocks")
-        if bucket_layout != "aligned":
-            blocks = blocks.repartition(n_buckets, "bucket")
-        # sorted-by-term files + 8MB row groups: the query side's isin(term)
-        # and block_max_wand predicates then SKIP row groups (a single
-        # default 128MB group per file made every per-term scan read the
-        # whole bucket's blobs — measured 0.4s for a 4-block query).
-        # kind leads the partitioning, so each query path reads only its
-        # own layout's directories.
-        catalog.write_table(
-            spark, blocks, wh.root, "postings", partition_by=["kind", "bucket"],
-            sort_by=["term", "salt", "block_id"], row_group_bytes=8 << 20,
+        salted, hot = _salt_chunks(
+            spark, flat, wh.path("term_stats"),
+            lambda: catalog.read_table(spark, wh.root, "term_stats"), hot_df, n_salts,
         )
-        n_blocks = obs.get["n_rows"]
+        # hot groups also emit the impact-ordered copy (kind=1);
+        # impact_terms records this coverage for queries
+        hot_set = "local" if isinstance(hot, list) else "join"
+        if hot_set == "local":
+            _write_impact_terms_local(wh, hot)
+        else:
+            catalog.write_table(spark, hot.select("term").coalesce(1), wh.root, "impact_terms")
+        n_blocks = _write_blocks(
+            spark, salted, wh.root, nparts=merge_parts or _merge_parts_default(spark, wh),
+            n_buckets=n_buckets, block_size=block_size, avgdl=avgdl,
+        )
         per_bucket = []
         if catalog.iceberg_catalog(spark) is not None:
             pass  # Iceberg keeps its own per-file lineage in table metadata
@@ -1480,7 +1456,7 @@ def build_index(
                 bid = int(bdir.rsplit("=", 1)[1])
                 nb = sum(sz for _, sz in fsio.file_sizes(bdir + "/*.parquet"))
                 per_bucket.append((bid, counts.get(bid, 0), nb))
-        finish("blocks", t0, per_bucket or [(-1, n_blocks, None)])
+        finish("blocks", t0, per_bucket or [(-1, n_blocks, None)], hot_set=hot_set)
 
     # ---- stage: per-term block summary (query-side pruning metadata) --------
     # One tiny row per term: enough for the query planner to compute WAND
@@ -1492,74 +1468,11 @@ def build_index(
     # achieving docs of distinct blocks are distinct — so the k-th entry
     # is a valid (and tight) lower bound on the k-th best single-term
     # score: for a stopword query the pruned scan keeps ~k blocks instead
-    # of the whole salted posting list.
-    #
-    # Skew note: the top-k-per-term agg is two-phase over the existing
-    # salt, so no task ever collects an unsalted stopword's full block
-    # list — group sizes are bounded by max(hot_df, df/n_salts)/block_size.
-    # The scan reads only small meta columns; parquet column pruning never
-    # touches the compressed binary blobs.
+    # of the whole salted posting list. See _block_summary for the
+    # impact ladder and the skew bound.
     if stage_runs("block_stats"):
         t0 = begin("block_stats")
-        # ONE conditional-aggregation pass over BOTH kinds of block meta
-        # ((term, salt) keys are shared — impact copies reuse their
-        # group's salt): kind=0 rows feed the df-derived stats (counting
-        # both kinds would double them), kind=1 rows feed the impact
-        # ladder — per covered salt [n_impact_blocks, max@0, min@0,
-        # max@1, min@1, ... at power-of-two block_ids] (~20 doubles that
-        # bound, within 2x, how many blocks ANY theta keeps; the query
-        # planner costs the routed plan with this instead of guessing).
-        # The po2 filter runs on the meta scan, so no task ever collects
-        # a full block list, and the whole stage is a single scan + two
-        # hash aggs (was two scans + a join).
-        pb = catalog.read_table(spark, wh.root, "postings")
-        k0 = F.col("kind") == 0
-        k1po2 = (F.col("kind") == 1) & (F.col("block_id").bitwiseAND(F.col("block_id") - 1) == 0)
-        pts = F.array_sort(
-            F.collect_list(
-                F.when(
-                    k1po2,
-                    F.struct(
-                        F.col("block_id").alias("b"),
-                        F.col("block_max_wand").alias("mx"),
-                        F.col("block_min_wand").alias("mn"),
-                    ),
-                )
-            )
-        )  # struct sort = by block_id asc
-        partial = pb.groupBy("term", "salt").agg(
-            F.count(F.when(k0, 1)).cast("long").alias("nb"),
-            F.sum(F.when(k0, F.col("n_docs"))).cast("long").alias("np"),
-            F.slice(
-                F.sort_array(F.collect_list(F.when(k0, F.col("block_max_wand"))), asc=False),
-                1, K_TOP,
-            ).alias("tw"),
-            F.count(F.when(F.col("kind") == 1, 1)).cast("double").alias("nib"),
-            pts.alias("pts"),
-        ).withColumn(
-            "salt_ladder",
-            F.when(
-                F.col("nib") > 0,
-                F.concat(
-                    F.array(F.col("nib")),
-                    F.flatten(F.transform(F.col("pts"), lambda s: F.array(s["mx"], s["mn"]))),
-                ),
-            ),
-        )
-        bs = (
-            partial.groupBy("term")
-            .agg(
-                F.sum("nb").alias("n_blocks"),
-                F.sum("np").alias("n_postings"),
-                F.slice(F.sort_array(F.flatten(F.collect_list("tw")), asc=False), 1, K_TOP).alias("top_wands"),
-                F.collect_list("salt_ladder").alias("impact_ladder"),  # skips nulls
-            )
-            .withColumn("ub_wand", F.col("top_wands")[0])
-            .withColumn(
-                "impact_ladder",
-                F.when(F.size("impact_ladder") > 0, F.col("impact_ladder")),
-            )
-        )
+        bs = _block_summary(catalog.read_table(spark, wh.root, "postings"))
         bs, obs = _observed(bs, "block_stats")
         catalog.write_table(spark, bs, wh.root, "term_block_stats")
         finish("block_stats", t0, [(-1, obs.get["n_rows"], None)])
@@ -1595,13 +1508,14 @@ def append_index(
       the read path; a retried append overwrites the orphan segment.
     - The merges are ADDITIVE, never a corpus rescan: term_stats = old
       table + segment-chunk aggregate (O(vocab + segment));
-      term_block_stats = old summary + new-blocks-only aggregate (both
-      are commutative merges — df/cf/counts sum, top_wands = top-K of
-      the two sorted lists' union).
+      term_block_stats = old summary + _block_summary of the segment's
+      blocks (both are commutative merges — df/cf/counts sum,
+      top_wands = top-K of the two sorted lists' union, impact ladders
+      concatenate their per-salt entries).
     - Stored WAND stats keep the ORIGINAL build's avgdl basis
       (config.wand_avgdl); scoring always uses the current corpus avgdl,
       and the query planner corrects pruning bounds for the drift
-      (query._pruned_block_filter ratio math), so post-append results
+      (query._wand_thetas / plan_query ratio math), so post-append results
       are IDENTICAL to a fresh build over the union corpus.
 
     In Iceberg mode the staged segment commits via per-table snapshots
@@ -1671,109 +1585,59 @@ def append_index(
         F.sum("cf").cast("long").alias("cf_new"),
     )
     old_ts = catalog.read_table(spark, wh.root, "term_stats")
-    merged_ts = (
-        old_ts.join(seg_ts, "term", "full_outer")
-        .select(
-            "term",
-            (F.coalesce(F.col("df"), F.lit(0)) + F.coalesce(F.col("df_new"), F.lit(0))).alias("df"),
-            (F.coalesce(F.col("cf"), F.lit(0)) + F.coalesce(F.col("cf_new"), F.lit(0))).alias("cf"),
-        )
+
+    def added(c):  # old + segment value of a full-outer-joined column
+        return F.coalesce(F.col(c), F.lit(0)) + F.coalesce(F.col(c + "_new"), F.lit(0))
+
+    merged_ts = old_ts.join(seg_ts, "term", "full_outer").select(
+        "term", added("df").alias("df"), added("cf").alias("cf")
     )
     merged_ts.write.mode("overwrite").parquet(segp("term_stats"))
-    mts = spark.read.parquet(segp("term_stats"))
 
     # ---- stage: segment blocks in the fresh salt range (original basis) ----
     # impact coverage (kind=1 emission) follows the build-time
     # impact_terms list, NOT the merged hot set: a term crossing hot_df
     # after the build stays regular-routed until the next full rebuild
     # (the query side consults impact_terms, so this is always correct).
-    hot_terms = mts.filter(F.col("df") >= hot_df).select("term", F.lit(True).alias("is_hot"))
     try:
-        covered = catalog.read_table(spark, wh.root, "impact_terms").select(
-            "term", F.lit(True).alias("_cov")
-        )
-    except Exception:
-        covered = None  # pre-v6 warehouse: no impact coverage
-    salted = (
-        seg_chunks.join(F.broadcast(hot_terms), "term", "left")
-        .withColumn(
-            "salt",
-            F.lit(salt_base)
-            + F.when(F.col("is_hot"), F.pmod(F.xxhash64("doc_ids"), F.lit(n_salts)).cast("int")).otherwise(F.lit(0)),
-        )
-        .withColumn("salt", F.col("salt").cast("int"))
-        .drop("is_hot")
+        covered = catalog.read_table(spark, wh.root, "impact_terms")
+    except Exception:  # pre-v6 warehouse: no impact coverage
+        covered = spark.createDataFrame([], "term string")
+    salted, _ = _salt_chunks(
+        spark, seg_chunks, segp("term_stats"), lambda: spark.read.parquet(segp("term_stats")),
+        hot_df, n_salts, salt_base=salt_base, covered=covered,
     )
-    if covered is not None:
-        salted = (
-            salted.join(F.broadcast(covered), "term", "left")
-            .withColumn("want_impact", F.coalesce(F.col("_cov"), F.lit(False)))
-            .drop("_cov")
-        )
-    nparts = _merge_parts_default(spark, wh, flat_dir=segp("postings_flat"))
-    new_blocks = (
-        salted.repartition(nparts, F.col("term"), F.col("salt"))
-        .mapInArrow(_make_block_mapper(block_size, wand_avgdl), BLOCK_SCHEMA)
-        .repartition(n_buckets, "bucket")
-    )
-    (
-        new_blocks.sortWithinPartitions("term", "salt", "block_id")
-        .write.mode("overwrite").option("parquet.block.size", 8 << 20)
-        .partitionBy("kind", "bucket").parquet(segp("postings"))
+    _write_blocks(
+        spark, salted, seg, nparts=_merge_parts_default(spark, wh, flat_dir=segp("postings_flat")),
+        n_buckets=n_buckets, block_size=block_size, avgdl=wand_avgdl, staged=True,
     )
     seg_blocks = spark.read.parquet(segp("postings"))
 
-    # ---- stage: merged term_block_stats = old + new-blocks-only agg ----
-    new_bs = (
-        seg_blocks.filter(F.col("kind") == 0)
-        .groupBy("term", "salt")
-        .agg(
-            F.count("*").cast("long").alias("nb"),
-            F.sum("n_docs").cast("long").alias("np"),
-            F.slice(F.sort_array(F.collect_list("block_max_wand"), asc=False), 1, K_TOP).alias("tw"),
-        )
-        .groupBy("term")
-        .agg(
-            F.sum("nb").alias("nb_new"),
-            F.sum("np").alias("np_new"),
-            F.slice(F.sort_array(F.flatten(F.collect_list("tw")), asc=False), 1, K_TOP).alias("tw_new"),
-        )
+    # ---- stage: merged term_block_stats = old summary + segment summary ----
+    # segment blocks live in a FRESH salt range, so every merge is
+    # commutative: counts sum, top_wands = top-K of the union, ladders
+    # concatenate their per-salt entries
+    new_bs = _block_summary(seg_blocks).select(
+        "term", *[F.col(c).alias(c + "_new") for c in ("n_blocks", "n_postings", "top_wands", "impact_ladder")]
     )
     old_bs = catalog.read_table(spark, wh.root, "term_block_stats")
     if "impact_ladder" not in old_bs.columns:  # pre-ladder warehouse
         old_bs = old_bs.withColumn("impact_ladder", F.lit(None).cast("array<array<double>>"))
-    # segment impact blocks live in a FRESH salt range, so the ladder
-    # merge is pure concatenation of per-salt entries
-    new_lad = _impact_ladders(seg_blocks).withColumnRenamed("impact_ladder", "lad_new")
-    empty_arr = F.array().cast("array<double>")
-    empty_lad = F.array().cast("array<array<double>>")
+
+    def concat(c, empty):
+        return F.concat(F.coalesce(F.col(c), empty), F.coalesce(F.col(c + "_new"), empty))
+
     merged_bs = (
         old_bs.join(new_bs, "term", "full_outer")
-        .join(new_lad, "term", "full_outer")
         .select(
             "term",
-            (F.coalesce(F.col("n_blocks"), F.lit(0)) + F.coalesce(F.col("nb_new"), F.lit(0))).alias("n_blocks"),
-            (F.coalesce(F.col("n_postings"), F.lit(0)) + F.coalesce(F.col("np_new"), F.lit(0))).alias("n_postings"),
+            added("n_blocks").alias("n_blocks"),
+            added("n_postings").alias("n_postings"),
             F.slice(
-                F.sort_array(
-                    F.concat(
-                        F.coalesce(F.col("top_wands"), empty_arr),
-                        F.coalesce(F.col("tw_new"), empty_arr),
-                    ),
-                    asc=False,
-                ),
-                1,
-                K_TOP,
+                F.sort_array(concat("top_wands", F.array().cast("array<double>")), asc=False), 1, K_TOP
             ).alias("top_wands"),
-            F.when(
-                F.col("impact_ladder").isNull() & F.col("lad_new").isNull(), F.lit(None)
-            )
-            .otherwise(
-                F.concat(
-                    F.coalesce(F.col("impact_ladder"), empty_lad),
-                    F.coalesce(F.col("lad_new"), empty_lad),
-                )
-            )
+            F.when(F.col("impact_ladder").isNull() & F.col("impact_ladder_new").isNull(), F.lit(None))
+            .otherwise(concat("impact_ladder", F.array().cast("array<array<double>>")))
             .alias("impact_ladder"),
         )
         .withColumn("ub_wand", F.col("top_wands")[0])
@@ -1883,8 +1747,6 @@ def compact_index(
         raise ValueError(f"no config manifest under {src.root} — nothing to compact")
     n_buckets, block_size = int(cfg["n_buckets"]), int(cfg["block_size"])
     hot_df, n_salts = int(cfg["hot_df"]), int(cfg["n_salts"])
-    impact_copies = bool(cfg.get("impact_copies", True))
-    bucket_layout = str(cfg.get("bucket_layout", "compact"))
     epoch = int(cfg.get("n_appends", 0) or 0)
     dst = Warehouse(dest or src.root.rstrip("/") + "__compact")
     fsio.remove(dst.root, recursive=True)
@@ -1900,14 +1762,10 @@ def compact_index(
     # mark extract done under the SAME fingerprint build_index will
     # compute for this (input_id, config), so resume starts at 'flat'
     input_id = f"compact:{os.path.normpath(src.root)}:e{epoch}"
-    fingerprint = (
-        f"{input_id}|v{INDEX_FORMAT}|cfg:b{n_buckets}.bs{block_size}.h{hot_df}.s{n_salts}"
-        f".fh0.kt{K_TOP}.bl{bucket_layout[0]}"
-    )
+    fingerprint = _fingerprint(input_id, n_buckets, block_size, hot_df, n_salts, from_html=False)
     dst.write_manifest("config", {
         "n_buckets": n_buckets, "block_size": block_size, "hot_df": hot_df,
-        "n_salts": n_salts, "k1": K1, "b": B, "impact_copies": impact_copies,
-        "bucket_layout": bucket_layout,
+        "n_salts": n_salts, "k1": K1, "b": B,
     })
     dst.write_manifest("extract", {
         "run_id": run_id, "stage": "extract", "input_id": input_id,
@@ -1918,6 +1776,5 @@ def compact_index(
         spark, docs.limit(0), dst,
         n_buckets=n_buckets, block_size=block_size, hot_df=hot_df, n_salts=n_salts,
         run_id=run_id, input_id=input_id, resume=True, from_html=False,
-        merge_parts=merge_parts, impact_copies=impact_copies,
-        bucket_layout=bucket_layout,
+        merge_parts=merge_parts,
     )

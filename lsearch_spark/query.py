@@ -2245,8 +2245,9 @@ DECODED_POS_SCHEMA = "term string, doc_id long, tf int, doc_len int, positions a
 
 
 def _decode_blocks_with_positions(blocks: DataFrame) -> DataFrame:
-    """Like _decode_blocks but also restores per-doc position lists
-    (vectorized segmented cumsum, no per-doc python loop)."""
+    """Unscored per-posting decode: (term, doc_id, tf, doc_len) plus the
+    per-doc position lists (vectorized segmented cumsum, no per-doc
+    python loop) — the positional input of phrase_search."""
 
     def it(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

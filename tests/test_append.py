@@ -29,9 +29,9 @@ N_A, N_B = 150, 80
 SHIFT = 1_000_000
 
 
-def _pages_b(spark):
-    pdf = make_pages(N_B, seed=9)
-    pdf["doc_id"] = pdf["doc_id"] + SHIFT
+def _pages_b(spark, n=N_B, seed=9, shift=SHIFT):
+    pdf = make_pages(n, seed=seed)
+    pdf["doc_id"] = pdf["doc_id"] + shift
     # longer docs on purpose: the append must shift avgdl so the
     # WAND-basis drift correction is actually exercised
     pdf["text"] = (pdf["text"] + " ") * 3 + "biology quantum flux"
@@ -93,6 +93,41 @@ def test_append_phrase_and_stats(spark, awh, union_pyidx):
     assert abs(stats["avgdl"] - union_pyidx.avgdl) < 1e-9
     cfg = awh.read_manifest("config")
     assert cfg["n_appends"] == 1 and cfg["wand_avgdl"] != pytest.approx(stats["avgdl"])
+
+
+def _summary_rows(df):
+    """term_block_stats rows by term; impact ladders as sorted multisets
+    of per-salt arrays (collect_list order is not fixed)."""
+    rows = []
+    for r in df.collect():
+        lad = r["impact_ladder"]
+        rows.append((
+            r["term"], r["n_blocks"], r["n_postings"], list(r["top_wands"]), r["ub_wand"],
+            None if lad is None else sorted(list(x) for x in lad),
+        ))
+    return sorted(rows, key=lambda x: x[0])
+
+
+def test_append_block_summary_merge_is_additive(spark, tmp_path):
+    """append_index merges the old term_block_stats with the segment's
+    summary (counts sum, top-K of the union, ladders concatenate) instead
+    of rescanning the corpus. After each of two appends, the committed
+    table must equal _block_summary recomputed over the resolved
+    postings (base + every segment)."""
+    from lsearch_spark import catalog
+    from lsearch_spark.build import _block_summary
+
+    root = str(tmp_path / "wh")
+    wh = build_index(
+        spark, pages_df(spark, N_A), root,
+        n_buckets=4, block_size=32, hot_df=64, n_salts=4, input_id="merge150",
+    )
+    for pages in (_pages_b(spark), _pages_b(spark, n=40, seed=11, shift=2 * SHIFT)):
+        append_index(spark, pages, wh, from_html=False)
+        got = _summary_rows(catalog.read_table(spark, root, "term_block_stats"))
+        want = _summary_rows(_block_summary(catalog.read_table(spark, root, "postings")))
+        assert got == want
+        assert any(r[5] for r in got)  # impact ladders are covered too
 
 
 def test_second_append_and_refusal(spark, tmp_path):

@@ -1026,24 +1026,46 @@ def test_plan_summary_reports_and_plans(spark, wh):
         assert line == f"plan: {info.get('plan')} tau={info.get('tau')!r}", (q, m, summary)
 
 
-def test_bucket_layouts_equivalent(spark, tmp_path):
-    """bucket_layout='aligned' (single bucket-aligned merge shuffle, >1
-    file per bucket) and 'compact' (second repartition, one file per
-    bucket) must produce rank-identical results on every query shape —
-    the layout is a physical-plan choice, never a semantic one."""
+def _table_rows(spark, root, name):
+    """A table's rows, sorted, with impact ladders as sorted multisets
+    (collect_list order is not fixed)."""
+    from lsearch_spark import catalog
+
+    rows = []
+    for r in catalog.read_table(spark, root, name).collect():
+        d = r.asDict()
+        if d.get("impact_ladder") is not None:
+            d["impact_ladder"] = sorted(list(x) for x in d["impact_ladder"])
+        rows.append(d)
+    return sorted(rows, key=repr)
+
+
+def test_build_gates_forced_both_ways(spark, tmp_path, monkeypatch):
+    """The build's driver-side fast paths (_term_stats_local, and the
+    _hot_terms_local InSet literal + driver-written impact_terms) against
+    their distributed sides (the Spark aggregate, the broadcast join):
+    identical tables and search rows, and each stage manifest records
+    which side ran."""
+    from lsearch_spark import build as Bd
+
     pages = pages_df(spark, 150)
-    whs = {}
-    for layout in ("compact", "aligned"):
-        root = str(tmp_path / f"wh_{layout}")
-        build_index(
-            spark, pages, root, run_id=layout, input_id=f"lay-{layout}",
-            resume=False, bucket_layout=layout,
-        )
-        whs[layout] = root
-    for q in ("the", "biology chemistry", "the -biology", "data ~query"):
-        a = search(spark, whs["compact"], q, k=10, prune=True).collect()
-        b = search(spark, whs["aligned"], q, k=10, prune=True).collect()
-        assert [tuple(r) for r in a] == [tuple(r) for r in b], q
+    kw = dict(n_buckets=4, block_size=32, hot_df=64, n_salts=4, resume=False)
+    local = build_index(spark, pages, str(tmp_path / "local"), input_id="gates-local", **kw)
+    monkeypatch.setattr(Bd, "_LOCAL_STATS_MAX_BYTES", 0)
+    monkeypatch.setattr(Bd, "_LOCAL_HOT_MAX_TERMS", 0)
+    dist = build_index(spark, pages, str(tmp_path / "dist"), input_id="gates-dist", **kw)
+
+    assert local.read_manifest("term_stats")["side"] == "local"
+    assert local.read_manifest("blocks")["hot_set"] == "local"
+    assert dist.read_manifest("term_stats")["side"] == "spark"
+    assert dist.read_manifest("blocks")["hot_set"] == "join"
+    for name in ("term_stats", "impact_terms", "term_block_stats"):
+        a, b = _table_rows(spark, local.root, name), _table_rows(spark, dist.root, name)
+        assert a == b and a, name
+    for q in ("the", "biology chemistry", "the -biology"):
+        a = search(spark, local, q, k=10).collect()
+        b = search(spark, dist, q, k=10).collect()
+        assert [tuple(r) for r in a] == [tuple(r) for r in b] and a, q
 
 
 def test_flat_direct_scan_row_group_split(spark, tmp_path):

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from lsearch_spark.build import Warehouse, build_index
-from lsearch_spark.corpus import pages_df
+from lsearch_spark.corpus import make_pages, pages_df
 from lsearch_spark.query import search
 
 
@@ -169,3 +169,24 @@ def test_append_after_vacuum(spark, tmp_path):
     build_index(spark, pages, union_root, input_id="c80all", **kw)
     want = [tuple(r) for r in search(spark, union_root, "biology", k=5).collect()]
     assert [(d, round(s, 9)) for d, s in got] == [(d, round(s, 9)) for d, s in want]
+
+
+def test_path_input_change_rebuilds_on_resume(spark, tmp_path):
+    """A local parquet path input folds its footer row count and file
+    bytes into the stage fingerprint: a part file added under the same
+    input_id must rebuild on resume, not serve the stale index."""
+    src = str(tmp_path / "pages")
+    pages_df(spark, 60).write.parquet(src)
+    root = str(tmp_path / "wh")
+    kw = dict(n_buckets=2, block_size=16, hot_df=32, n_salts=2, input_id="p60")
+    build_index(spark, src, root, **kw)
+
+    pdf = make_pages(1, seed=5).head(1).copy()
+    pdf["doc_id"] = 9_000_000
+    pdf["text"] = "zyxwnewterm arrives late"
+    pdf["html"] = None
+    schema = "doc_id long, url string, warc_ts timestamp, html binary, text string, lang string"
+    spark.createDataFrame(pdf, schema=schema).coalesce(1).write.mode("append").parquet(src)
+
+    wh = build_index(spark, src, root, **kw)  # resume=True, same input_id
+    assert [r["doc_id"] for r in search(spark, wh, "zyxwnewterm", k=10).collect()] == [9_000_000]

@@ -1,7 +1,7 @@
 """Pure-python soundness properties of the driver-side WAND planner's
 ladder estimators (query._est_kept_blocks / query._deep_kth_wand).
 
-The ladders are built here exactly as build._impact_ladders builds them
+The ladders are built here exactly as build._block_summary builds them
 (per salt: [n_blocks, max@0, min@0, max@1, min@1, ... at power-of-two
 block_ids] over a wand-DESC posting sequence), then the two claims are
 checked against ground truth computed directly from the postings:

@@ -4,14 +4,16 @@ Blank lines, comment-only lines and docstrings (the leading string
 statement of a module, class or function) do not count.
 
     python tools/sloc.py lsearch_spark/query.py
-    python tools/sloc.py lsearch_spark/*.py lsearch_spark/functions/*.py
+    python tools/sloc.py lsearch_spark
 
+A directory argument counts every *.py file under it, recursively.
 Prints one line per file and, for several files, a total.
 """
 
 from __future__ import annotations
 
 import ast
+import os
 import sys
 import tokenize
 
@@ -47,16 +49,25 @@ def code_lines(path: str) -> int:
     return len(code - doc)
 
 
+def _py_files(path: str) -> list[str]:
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs if f.endswith(".py")
+    )
+
+
 def main(argv: list[str]) -> int:
     if not argv:
         print(__doc__.strip(), file=sys.stderr)
         return 2
+    paths = [p for arg in argv for p in _py_files(arg)]
     total = 0
-    for path in argv:
+    for path in paths:
         n = code_lines(path)
         total += n
         print(f"{n:7d}  {path}")
-    if len(argv) > 1:
+    if len(paths) > 1:
         print(f"{total:7d}  total")
     return 0
 
